@@ -11,6 +11,9 @@ so the same code scales to a multi-executor cluster:
 - AQE on: runtime re-planning (skew-join splitting, broadcast demotion/
   promotion, partition coalescing) is the 100-TB safety net.
 - Arrow on: every pandas UDF / applyInPandas crossing is Arrow-batched.
+- Constraint propagation off in local mode, on in production (see
+  get_spark): with it off the optimizer infers no ``IsNotNull`` filters,
+  so a scan's pushed filters hold only the query's own predicates.
 - Session timezone pinned UTC so results compare bit-exactly with the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
 """
