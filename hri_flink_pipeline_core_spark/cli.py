@@ -17,11 +17,16 @@ import argparse
 
 from .operators.tracker import DEFAULT_TIMEOUT_MS
 from .operators.validation import json_validator
+from .schemas import COUNT_EVENT_SCHEMA
 from .session import get_spark
 from .sinks import kafka as ksink
 from .sinks.mgmt_api import MgmtApiSink, MgmtClient
 from .sources import kafka as ksource
-from .streaming.pipeline import ValidationPipeline
+from .streaming.pipeline import (
+    ValidationPipeline,
+    parquet_dir_sink,
+    read_parquet_dir_stream,
+)
 from .topics import derive_topics
 
 
@@ -161,17 +166,12 @@ def main(argv=None) -> None:
     import os
 
     counts_dir = os.path.join(args.workdir, "counts")
-    pipe.counts_sink = lambda df, b: df.write.mode("overwrite").parquet(
-        os.path.join(counts_dir, f"batch={b}")
-    )
+    pipe.counts_sink = parquet_dir_sink(counts_dir)
 
     dim = pipe.start_notification_dim()
     pipe.start_validation(dim)
 
-    from .schemas import COUNT_EVENT_SCHEMA
-    from .sources.files import read_table_stream
-
-    counts_stream = read_table_stream(spark, counts_dir, COUNT_EVENT_SCHEMA)
+    counts_stream = read_parquet_dir_stream(spark, counts_dir, COUNT_EVENT_SCHEMA)
     notif_stream2 = ksource.read_notifications_stream(
         spark, topics.notification_topic, client_opts
     )

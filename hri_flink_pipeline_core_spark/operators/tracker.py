@@ -30,11 +30,12 @@ Three implementations share one sequential fold (``BatchTrackerState.feed``):
 
 Scale notes: count events arrive one per validated record — at 100 TB that
 is the full record volume. The streaming path therefore (a) keys by
-batchId so state is O(#batches), (b) folds each micro-batch group with
-numpy cumulative sums rather than a Python per-row loop, and (c) relies on
-the validator stage's map-side partial aggregation option
-(``pre_aggregate_counts``) to shrink the shuffle to O(#batches × #tasks)
-rows per micro-batch.
+batchId so state is O(#batches) and (b) folds each micro-batch group with
+numpy cumulative sums rather than a Python per-row loop. Its shuffle stays
+one row per count event: the exact ``== invalidThreshold`` check depends
+on arrival order, so the streaming path does not pre-aggregate.
+``pre_aggregate_counts`` (one row per batchId) serves only the batch-mode
+``track_batches_batch``.
 """
 
 from __future__ import annotations

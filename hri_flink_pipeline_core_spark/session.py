@@ -27,6 +27,16 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _bool_env(name: str, default: str) -> str:
+    """$name as a Spark boolean conf value. Anything but "true"/"false"
+    fails here: Spark rejects it only at session start, and an empty
+    value there makes the start hang instead of raising."""
+    value = os.environ.get(name, default)
+    if value not in ("true", "false"):
+        raise ValueError(f"{name} must be 'true' or 'false', got {value!r}")
+    return value
+
+
 def get_spark(
     app_name: str = "hri-pipeline-core-spark",
     cpus: int | None = None,
@@ -89,7 +99,10 @@ def get_spark(
     # a parquet scan prunes real IO — the same overhead-vs-benefit
     # scale crossover as the AQE advisory above.
     # $SPARK_GRAFT_CONSTRAINT_PROP overrides directly ("true"/"false").
-    constraint_default = "false" if mode == "local" else "true"
+    constraint_prop = _bool_env(
+        "SPARK_GRAFT_CONSTRAINT_PROP", "false" if mode == "local" else "true"
+    )
+    df_debugging = _bool_env("SPARK_GRAFT_DF_DEBUGGING", "false")
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -122,10 +135,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", advisory_default),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.constraintPropagation.enabled",
-            os.environ.get("SPARK_GRAFT_CONSTRAINT_PROP", constraint_default),
-        )
+        .config("spark.sql.constraintPropagation.enabled", constraint_prop)
         # PySpark 4's DataFrame-debugging wrapper captures a Python call
         # site for error enrichment on EVERY DataFrame API call: a
         # Python stack walk plus ~3 py4j round-trips per operation
@@ -139,10 +149,7 @@ def get_spark(
         # are untouched (the wrapper only enriches error messages).
         # $SPARK_GRAFT_DF_DEBUGGING restores it for interactive
         # debugging sessions.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", df_debugging)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -165,22 +165,86 @@ class EpochLog:
         self._append(f"A {epoch}")
 
 
-def _resolve_doubtful(log: EpochLog, epoch: int, policy: str, who: str) -> bool:
-    """Apply doubtful_epoch_policy; returns True if the epoch should be
-    (re)written, False if it must be skipped."""
-    if policy == "fail":
-        raise RuntimeError(
-            f"{who}: epoch {epoch} has a logged intent but no commit "
-            "record — a crash landed between Kafka commit and the log "
-            "append. Verify via broker offsets, then append "
-            f"'C {epoch}' to {log.path} (committed) or delete the "
-            "intent line (not committed) and restart."
+def _write_epoch(
+    log: EpochLog,
+    epoch: int,
+    policy: str,
+    who: str,
+    get_producer: Callable[[], object],
+    drop_producer: Callable[[], None],
+    rows: Callable[[], Iterable],
+) -> None:
+    """Write one epoch in one transaction: the protocol both writers run
+    (module doc). The writers differ only in where the epoch log lives,
+    how a producer is obtained (``get_producer``: cached and
+    ``init_transactions``-ed) and how a producer that cannot abort is
+    evicted (``drop_producer``). ``rows`` is called only once the
+    transaction is open, so a skipped epoch reads no rows."""
+    if epoch in log.committed:
+        # Replayed epoch (same batch_id after recovery): its data is
+        # already committed, so re-sending would duplicate.
+        return
+    if epoch in log.doubtful():
+        if policy == "fail":
+            raise RuntimeError(
+                f"{who}: epoch {epoch} has a logged intent but no commit "
+                "record — a crash landed between Kafka commit and the log "
+                "append. Verify via broker offsets, then append "
+                f"'C {epoch}' to {log.path} (committed) or delete the "
+                "intent line (not committed) and restart."
+            )
+        if policy == "skip":
+            # at-most-once for this epoch: assume the broker commit landed.
+            log.record_commit(epoch)
+            return
+        # resend: downstream offset-identity dedup absorbs it
+    producer = get_producer()
+    try:
+        producer.begin_transaction()
+        send_rows(producer, rows())
+        log.record_intent(epoch)
+        producer.commit_transaction()
+    except Exception:
+        try:
+            producer.abort_transaction()
+        except Exception:
+            # A producer that cannot even abort is fenced or dead (e.g. a
+            # newer incarnation bumped the epoch). Evict it so the next
+            # attempt re-inits instead of failing every later epoch.
+            # After a SUCCESSFUL abort the producer is reusable per the
+            # Kafka client contract — keep it.
+            drop_producer()
+        else:
+            # The abort SUCCEEDED: the broker definitively has no data
+            # for this attempt. If an intent was already logged
+            # (commit_transaction was the failing call), record the
+            # abort so the retry is a plain re-send, not a
+            # doubtful-epoch policy case — under 'skip' the
+            # misclassification would silently drop the epoch.
+            if epoch in log.doubtful():
+                try:
+                    log.record_abort(epoch)
+                except Exception:
+                    pass  # never mask the original failure
+        raise
+    log.record_commit(epoch)
+
+
+def send_rows(producer, rows: Iterable) -> None:
+    """Send Kafka-sink-shaped rows (``topic, key, value[, headers]``)."""
+    for row in rows:
+        headers = None
+        if "headers" in row.__fields__ and row["headers"] is not None:
+            headers = [
+                (h["key"], bytes(h["value"]) if h["value"] is not None else None)
+                for h in row["headers"]
+            ]
+        producer.send(
+            topic=row["topic"],
+            key=bytes(row["key"]) if row["key"] is not None else None,
+            value=bytes(row["value"]) if row["value"] is not None else None,
+            headers=headers,
         )
-    if policy == "skip":
-        # at-most-once for this epoch: assume the broker commit landed.
-        log.record_commit(epoch)
-        return False
-    return True  # resend: downstream offset-identity dedup absorbs it
 
 
 class KafkaTransactionalWriter:
@@ -227,7 +291,6 @@ class KafkaTransactionalWriter:
         conf["transactional.id"] = transactional_id
         self.producer_conf = conf
 
-    # -- transaction state machine -------------------------------------
     def _get_producer(self):
         if self._producer is None:
             self._producer = self._factory(dict(self.producer_conf))
@@ -236,70 +299,27 @@ class KafkaTransactionalWriter:
             self._producer.init_transactions()
         return self._producer
 
+    def _drop_producer(self) -> None:
+        self._producer = None
+
     def already_committed(self, batch_id: int) -> bool:
         return batch_id in self._log.committed
 
     # -- foreachBatch entry point --------------------------------------
     def __call__(self, batch_df, batch_id: int) -> None:
-        """Write one micro-batch in one transaction. Replayed epochs
-        (same batch_id after recovery) are skipped — their data is
-        already committed, so re-sending would duplicate."""
-        batch_id = int(batch_id)
-        if self.already_committed(batch_id):
-            return
-        if batch_id in self._log.doubtful() and not _resolve_doubtful(
-            self._log, batch_id, self.doubtful_epoch_policy, "KafkaTransactionalWriter"
-        ):
-            return
-        producer = self._get_producer()
-        try:
-            producer.begin_transaction()
+        """Write one micro-batch in one transaction; a replayed epoch is
+        skipped."""
+        _write_epoch(
+            self._log,
+            int(batch_id),
+            self.doubtful_epoch_policy,
+            "KafkaTransactionalWriter",
+            get_producer=self._get_producer,
+            drop_producer=self._drop_producer,
             # toLocalIterator: rows stream to the driver one partition
             # at a time — bounded memory, no full collect.
-            self.send_rows(producer, batch_df.toLocalIterator())
-            self._log.record_intent(batch_id)
-            producer.commit_transaction()
-        except Exception:
-            try:
-                producer.abort_transaction()
-            except Exception:
-                # A producer that cannot even abort is fenced or dead
-                # (e.g. a newer incarnation bumped the epoch). Drop the
-                # cached handle so the next epoch re-inits instead of
-                # failing every subsequent batch of this long-lived
-                # writer. After a SUCCESSFUL abort the producer is
-                # reusable per the Kafka client contract — keep it.
-                self._producer = None
-            else:
-                # The abort SUCCEEDED: the broker definitively has no
-                # data for this attempt. If an intent was already
-                # logged (commit_transaction was the failing call),
-                # record the abort so the retry is a plain re-send, not
-                # a doubtful-epoch policy case — under 'skip' the
-                # misclassification would silently drop the batch.
-                if batch_id in self._log.doubtful():
-                    try:
-                        self._log.record_abort(batch_id)
-                    except Exception:
-                        pass  # never mask the original failure
-            raise
-        self._log.record_commit(batch_id)
-
-    @staticmethod
-    def send_rows(producer, rows: Iterable) -> None:
-        for row in rows:
-            headers = None
-            if "headers" in row.__fields__ and row["headers"] is not None:
-                headers = [
-                    (h["key"], bytes(h["value"]) if h["value"] is not None else None)
-                    for h in row["headers"]
-                ]
-            producer.send(
-                topic=row["topic"],
-                key=bytes(row["key"]) if row["key"] is not None else None,
-                value=bytes(row["value"]) if row["value"] is not None else None,
-                headers=headers,
-            )
+            rows=batch_df.toLocalIterator,
+        )
 
     def close(self) -> None:
         if self._producer is not None and hasattr(self._producer, "close"):
@@ -378,49 +398,24 @@ class KafkaPartitionedTransactionalWriter:
 
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else 0
-            log = EpochLog(os.path.join(log_dir, f"p{pid}.log"))
-            if epoch in log.committed:
-                return
-            if epoch in log.doubtful() and not _resolve_doubtful(
-                log, epoch, policy, f"KafkaPartitionedTransactionalWriter[p{pid}]"
-            ):
-                return
-            pconf = dict(conf)
-            pconf["transactional.id"] = f"{prefix}-p{pid}"
-            # One producer per (worker process, transactional.id),
-            # cached across micro-batches: Python workers are reused
-            # (spark.python.worker.reuse), so steady state is one
-            # init_transactions per slot, not per batch. If the
-            # partition migrates to another worker, the new producer's
-            # init fences the old one — safe by construction.
-            producer = _worker_producer(factory, pconf)
-            try:
-                producer.begin_transaction()
-                KafkaTransactionalWriter.send_rows(producer, rows)
-                log.record_intent(epoch)
-                producer.commit_transaction()
-            except Exception:
-                try:
-                    producer.abort_transaction()
-                except Exception:
-                    # Cannot even abort -> fenced or dead (the partition
-                    # migrated to another worker and back, so a newer
-                    # incarnation bumped the epoch). Evict the cached
-                    # handle so the task retry re-inits a fresh producer
-                    # instead of failing forever. After a successful
-                    # abort the producer is reusable — keep it cached.
-                    _WORKER_PRODUCERS.pop(pconf["transactional.id"], None)
-                else:
-                    # Successful abort after a logged intent: record it
-                    # so the replay treats the epoch as plainly
-                    # uncommitted, not doubtful (see driver writer).
-                    if epoch in log.doubtful():
-                        try:
-                            log.record_abort(epoch)
-                        except Exception:
-                            pass
-                raise
-            log.record_commit(epoch)
+            tid = f"{prefix}-p{pid}"
+            pconf = {**conf, "transactional.id": tid}
+            _write_epoch(
+                EpochLog(os.path.join(log_dir, f"p{pid}.log")),
+                epoch,
+                policy,
+                f"KafkaPartitionedTransactionalWriter[p{pid}]",
+                # One producer per (worker process, transactional.id),
+                # cached across micro-batches: Python workers are reused
+                # (spark.python.worker.reuse), so steady state is one
+                # init_transactions per slot, not per batch. If the
+                # partition migrates to another worker, the new
+                # producer's init fences the old one — safe by
+                # construction.
+                get_producer=lambda: _worker_producer(factory, pconf),
+                drop_producer=lambda: _WORKER_PRODUCERS.pop(tid, None),
+                rows=lambda: rows,
+            )
 
         batch_df.foreachPartition(_write_partition)
 

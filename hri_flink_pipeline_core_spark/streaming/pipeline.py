@@ -9,10 +9,12 @@ Reference graph -> Spark mapping:
      (versioned dirs + _LATEST pointer for atomic swap); each record
      micro-batch broadcast-joins the current dim. Micro-batching removes
      the reference's metadata/data race (SURVEY.md §3 EP-1.4): a record
-     batch always sees *all* notifications compacted so far, and a
-     too-early record routes to invalid exactly like the reference's
-     unknown-batchId rule (or triggers the injectable BatchLookup,
-     mirroring ValidationProcessFunction.scala:161-169).
+     batch always sees *all* notifications compacted so far. A record
+     that arrives before its batch's notification goes to ``*.invalid``
+     as ``Bad Message - Unknown batchId`` and emits no count event. The
+     injectable BatchLookup (operators/batch_lookup.py, the reference's
+     ValidationProcessFunction.scala:161-169 Mgmt-API lookup) is not
+     wired into this query.
 
 2. data source -> ValidationProcessFunction (3 outputs)
      => one foreachBatch: persist the annotated batch once, then write
@@ -55,6 +57,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.tracker import DEFAULT_TIMEOUT_MS
 from ..operators.validation import (
@@ -64,6 +67,7 @@ from ..operators.validation import (
     validate_records,
 )
 from ..schemas import BATCH_NOTIFICATION_SCHEMA
+from ..sources.files import read_table_stream
 from .tracker_stream import streaming_tracker, tag_counts, tag_notifications
 
 # A sink is any callable taking the (already shaped) micro-batch DataFrame
@@ -279,12 +283,31 @@ class ValidationPipeline:
 def parquet_dir_sink(root: str) -> BatchSink:
     """Idempotent-on-replay file sink: each micro-batch writes (overwrite)
     its own subdirectory, so a restarted query that replays batch N
-    rewrites rather than duplicates."""
+    rewrites rather than duplicates. Read it back with
+    ``read_parquet_dir_stream``."""
 
     def write(df: DataFrame, batch_id: int) -> None:
         df.write.mode("overwrite").parquet(os.path.join(root, f"batch={batch_id}"))
 
     return write
+
+
+def read_parquet_dir_stream(
+    spark: SparkSession, root: str, schema: T.StructType
+) -> DataFrame:
+    """Streaming read of a ``parquet_dir_sink(root)`` directory: ``schema``
+    plus the ``batch`` column (the writing micro-batch's id). The file
+    source infers ``batch`` from the ``batch=<id>`` directories and adds
+    it to every row, so it must be declared: without it each micro-batch
+    fails with ``Invalid batch: <schema> != <schema>,batch``. ``root`` is
+    created when missing: a reader usually starts before the sink's first
+    write, and the file source refuses a path that does not exist."""
+    os.makedirs(root, exist_ok=True)
+    return read_table_stream(
+        spark,
+        root,
+        T.StructType(schema.fields + [T.StructField("batch", T.LongType(), True)]),
+    )
 
 
 def upsert_parquet_sink(

@@ -27,10 +27,11 @@ of the predicates, three execution harnesses.
 
 Scale notes: the shuffle into this operator is keyed by batchId, so
 state is O(#batches), not O(#records). Count events are folded with the
-vectorized numpy path (no per-row Python loop); at 100 TB the upstream
-``pre_aggregate_counts`` option shrinks the shuffle itself to
-O(#batches × #tasks) rows per micro-batch when exact ==-threshold
-arrival-order semantics are not required.
+vectorized numpy path (no per-row Python loop). The shuffle itself still
+carries one row per count event: there is no streaming pre-aggregation
+(``pre_aggregate_counts`` serves only the batch-mode
+``track_batches_batch``), because the exact ==-threshold check depends on
+arrival order.
 """
 
 from __future__ import annotations
@@ -144,6 +145,17 @@ def _outputs_to_pdf(outputs: list[dict]) -> pd.DataFrame:
     )
 
 
+def _state_row(st: BatchTrackerState) -> tuple:
+    """BatchTrackerState -> one STATE_SCHEMA row."""
+    return (
+        st.valid,
+        st.invalid,
+        st.is_finished,
+        st.last_modified,
+        json.dumps(st.notification) if st.notification else None,
+    )
+
+
 def make_tracker_func(timeout_ms: int = DEFAULT_TIMEOUT_MS, ttl_ms: int = STATE_TTL_MS):
     """Build the applyInPandasWithState function closure."""
 
@@ -170,15 +182,7 @@ def make_tracker_func(timeout_ms: int = DEFAULT_TIMEOUT_MS, ttl_ms: int = STATE_
                 return
             if st._is_complete():
                 st._emit(Status.COMPLETED, None)
-            state.update(
-                (
-                    st.valid,
-                    st.invalid,
-                    st.is_finished,
-                    st.last_modified,
-                    json.dumps(st.notification) if st.notification else None,
-                )
-            )
+            state.update(_state_row(st))
             if st.outputs:
                 yield _outputs_to_pdf(st.outputs)
             return
@@ -205,15 +209,7 @@ def make_tracker_func(timeout_ms: int = DEFAULT_TIMEOUT_MS, ttl_ms: int = STATE_
                 )
             start = end
 
-        state.update(
-            (
-                st.valid,
-                st.invalid,
-                st.is_finished,
-                st.last_modified,
-                json.dumps(st.notification) if st.notification else None,
-            )
-        )
+        state.update(_state_row(st))
         # arm/re-arm the completion timer from the latest activity
         # (Tracker.scala:116-120); also arm a TTL sweep for parked state.
         if st._is_complete():

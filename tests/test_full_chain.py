@@ -30,6 +30,7 @@ from hri_flink_pipeline_core_spark.sources.files import read_table_stream
 from hri_flink_pipeline_core_spark.streaming.pipeline import (
     ValidationPipeline,
     parquet_dir_sink,
+    read_parquet_dir_stream,
 )
 
 TOPIC = "ingest.t1.di.in"
@@ -85,18 +86,17 @@ def test_full_chain_happy_path(spark, tmp_path):
     try:
         dim = pipe.start_notification_dim(trigger={"availableNow": True})
         pipe.queries[-1].awaitTermination(120)
-        pipe.start_validation(dim, trigger={"availableNow": True})
-        pipe.queries[-1].awaitTermination(120)
 
-        # stage 3: tracker over the counts directory + notification stream
+        # stage 3: tracker over the counts directory + notification stream.
+        # It starts before stage 2 writes any counts, as in cli.py.
         pipe.notification_out_sink = lambda df, _b: terminal_rows.extend(df.collect())
-        counts_stream = read_table_stream(
-            spark, counts_dir + "/batch=0", COUNT_EVENT_SCHEMA
-        )
+        counts_stream = read_parquet_dir_stream(spark, counts_dir, COUNT_EVENT_SCHEMA)
         notif_stream = read_table_stream(spark, notif_dir, notif_schema)
-        q = pipe.start_tracker(
+        pipe.start_tracker(
             counts_stream, notif_stream, trigger={"processingTime": "300 milliseconds"}
         )
+        pipe.start_validation(dim, trigger={"availableNow": True})
+        pipe.queries[-1].awaitTermination(120)
         import time
 
         deadline = time.time() + 60

@@ -36,6 +36,27 @@ def test_get_spark_mode_validation():
         S.get_spark("mode-bad", mode="prod")
 
 
+class _NoSparkSession:
+    """Stands in for SparkSession: reaching the builder fails the test
+    at once instead of starting (or hanging) a JVM."""
+
+    @property
+    def builder(self):
+        raise AssertionError("get_spark reached the SparkSession builder")
+
+
+@pytest.mark.parametrize(
+    "name", ["SPARK_GRAFT_CONSTRAINT_PROP", "SPARK_GRAFT_DF_DEBUGGING"]
+)
+def test_get_spark_rejects_empty_boolean_override(monkeypatch, name):
+    """A set-but-empty boolean override fails before the builder runs;
+    handed to Spark, the empty value makes session start hang."""
+    monkeypatch.setattr(S, "SparkSession", _NoSparkSession())
+    monkeypatch.setenv(name, "")
+    with pytest.raises(ValueError, match=f"{name} must be 'true' or 'false'"):
+        S.get_spark("bool-bad")
+
+
 def test_get_spark_local_mode_advisory(spark):
     # the shared test session was built in (default) local mode
     assert (

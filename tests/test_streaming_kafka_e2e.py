@@ -36,10 +36,10 @@ from hri_flink_pipeline_core_spark.streaming.pipeline import (
     parquet_dir_sink,
 )
 from hri_flink_pipeline_core_spark.streaming.tracker_stream import (
+    streaming_tracker,
     tag_counts,
     tag_notifications,
 )
-from hri_flink_pipeline_core_spark.streaming.tws_tracker import streaming_tracker_auto
 from hri_flink_pipeline_core_spark.topics import derive_topics
 
 TOPIC = "ingest.t1.di.in"
@@ -213,7 +213,7 @@ def test_streaming_valid_invalid_split_to_kafka_with_terminal(
     # query must keep triggering past the timeout (availableNow would stop
     # before the timer fires) — the reference's batchCompletionDelay idiom.
     q = (
-        streaming_tracker_auto(
+        streaming_tracker(
             read_table_stream(spark, tagged_dir, tagged_schema), timeout_ms=2_000
         )
         .writeStream.foreachBatch(terminal_sink)
@@ -277,7 +277,7 @@ def test_streaming_threshold_fail_to_kafka(spark, tmp_path):
     tagged_schema = spark.read.parquet(tagged_dir).schema
 
     q = (
-        streaming_tracker_auto(
+        streaming_tracker(
             read_table_stream(spark, tagged_dir, tagged_schema), timeout_ms=300_000
         )
         .writeStream.foreachBatch(
