@@ -842,21 +842,56 @@ def q_kmv_set_ops(spark, sf_dir):
     re-slices — a constant-size agg. No WindowExec anywhere in the
     plan (asserted in test_plan_shapes).
 
-    Round 10 (VERDICT r9 #4): the default shape LITERALIZES the
+    Round 10 (VERDICT r9 #4): the query LITERALIZES the
     sketches — they are k-bounded per language BY CONSTRUCTION (the
     entire point of a sketch), so after the two-level min-k they are
     collected and the per-pair union/intersect algebra runs driver-side
-    in Python (IEEE doubles, arithmetic order identical to the former
-    Column expressions — hash-verified). That deletes the two broadcast
-    pair joins, the est projection chain and the final join from the
-    plan: ~16 AQE stage-jobs -> ~9 (same pattern as the literal ANN
-    models). $SPARK_GRAFT_KMV_SHAPE=agg keeps the all-DataFrame shape
-    for the paired A/B (ab_kmv.py)."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_KMV_SHAPE", "literal") == "agg":
-        return _kmv_set_ops_agg(spark, sf_dir)
-    return _kmv_set_ops_literal(spark, sf_dir)
+    in Python with IEEE-double arithmetic: m < k -> m, otherwise
+    (k-1)*2^60 / kth; intersect = (n_common/m) * est_union. Two bounded
+    collects (sketches, exact sums) replace the former all-DataFrame
+    pair-join chain (~16 AQE stage-jobs -> ~9, same pattern as the
+    literal ANN models); the result is a 3-row local leaf, and the
+    corpus-scale work (vocabulary agg) is unchanged."""
+    gm, sk = _kmv_vocab_and_sketch(spark, sf_dir)
+    # only the declared pair languages reach the driver — the collect
+    # is bounded by len(pair langs) x k regardless of how many distinct
+    # languages the corpus carries
+    langs = sorted({l for pair in _KMV_PAIRS for l in pair})
+    sketches = {
+        r["lang"]: list(r["hs"])
+        for r in sk.filter(F.col("lang").isin(langs)).collect()
+    }
+    keep = [
+        (la, lb)
+        for la, lb in _KMV_PAIRS
+        if la in sketches or lb in sketches
+    ]
+    if not keep:
+        return spark.createDataFrame([], _KMV_OUT_SCHEMA)
+    exact = _kmv_exact_sums(gm).collect()[0]
+    rows = []
+    for la, lb in keep:
+        hs_a = sketches.get(la, [])
+        hs_b = sketches.get(lb, [])
+        top = sorted(set(hs_a) | set(hs_b))[:_KMV_K]
+        m = len(top)
+        if m < _KMV_K:
+            est_union = float(m)
+        else:
+            est_union = float(_KMV_K - 1) * 2.0**60 / float(top[-1])
+        n_common = len(set(top) & set(hs_a) & set(hs_b))
+        est_intersect = (float(n_common) / float(m)) * est_union
+        rows.append(
+            (
+                la,
+                lb,
+                est_union,
+                est_intersect,
+                int(exact[f"_u_{la}_{lb}"]),
+                int(exact[f"_i_{la}_{lb}"]),
+            )
+        )
+    return spark.createDataFrame(rows, _KMV_OUT_SCHEMA)
 
 
 def _kmv_vocab_and_sketch(spark, sf_dir):
@@ -921,144 +956,6 @@ _KMV_OUT_SCHEMA = (
     "lang_a string, lang_b string, est_union double, est_intersect double,"
     " exact_union bigint, exact_intersect bigint"
 )
-
-
-def _kmv_set_ops_literal(spark, sf_dir):
-    """Literal-sketch shape (round 10, default): collect the k-bounded
-    per-language sketches, run the pair algebra in Python with the SAME
-    IEEE-double arithmetic order as the Column form (m < k -> m;
-    otherwise (k-1)*2^60 / kth; intersect = (n_common/m) * est_union),
-    fetch the exact sums with one scalar agg, and return the 3-row
-    result as literals. Two bounded collects replace the pair-join
-    chain; the corpus-scale work (vocabulary agg) is unchanged."""
-    gm, sk = _kmv_vocab_and_sketch(spark, sf_dir)
-    # only the declared pair languages reach the driver — the collect
-    # is bounded by len(pair langs) x k regardless of how many distinct
-    # languages the corpus carries (the agg shape's 3-row pair join
-    # imposed the same bound)
-    langs = sorted({l for pair in _KMV_PAIRS for l in pair})
-    sketches = {
-        r["lang"]: list(r["hs"])
-        for r in sk.filter(F.col("lang").isin(langs)).collect()
-    }
-    keep = [
-        (la, lb)
-        for la, lb in _KMV_PAIRS
-        if la in sketches or lb in sketches
-    ]
-    if not keep:
-        return spark.createDataFrame([], _KMV_OUT_SCHEMA)
-    exact = _kmv_exact_sums(gm).collect()[0]
-    rows = []
-    for la, lb in keep:
-        hs_a = sketches.get(la, [])
-        hs_b = sketches.get(lb, [])
-        top = sorted(set(hs_a) | set(hs_b))[:_KMV_K]
-        m = len(top)
-        if m < _KMV_K:
-            est_union = float(m)
-        else:
-            est_union = float(_KMV_K - 1) * 2.0**60 / float(top[-1])
-        n_common = len(set(top) & set(hs_a) & set(hs_b))
-        est_intersect = (float(n_common) / float(m)) * est_union
-        rows.append(
-            (
-                la,
-                lb,
-                est_union,
-                est_intersect,
-                int(exact[f"_u_{la}_{lb}"]),
-                int(exact[f"_i_{la}_{lb}"]),
-            )
-        )
-    return spark.createDataFrame(rows, _KMV_OUT_SCHEMA)
-
-
-def _kmv_set_ops_agg(spark, sf_dir):
-    """All-DataFrame shape (rounds 6-9) — kept as the A/B counterpart
-    and for callers that must not collect (e.g. the result feeds a
-    larger plan)."""
-    gm, sk = _kmv_vocab_and_sketch(spark, sf_dir)
-    # Pair merge as ARRAY ALGEBRA on the (one-row-per-language) sketch
-    # table: joining the 3-row pair list against the sketch arrays
-    # twice (both broadcast) and computing the union min-k with
-    # array_union/array_sort/slice replaces the former
-    # explode -> union -> groupBy(h) -> groupBy(pair) chain — four
-    # exchanges and two aggregation jobs on the job floor, for
-    # identical semantics (sketches are distinct-h sets, so the sorted
-    # union's first k structs == the former per-pair min-k merge).
-    # Constant work per pair regardless of corpus size either way; the
-    # array form is one projection.
-    pairs = spark.createDataFrame(list(_KMV_PAIRS), "lang_a string, lang_b string")
-    ska = sk.select(F.col("lang").alias("lang_a"), F.col("hs").alias("hs_a"))
-    skb = sk.select(F.col("lang").alias("lang_b"), F.col("hs").alias("hs_b"))
-    top = F.slice(F.array_sort(F.array_union("hs_a", "hs_b")), 1, _KMV_K)
-    no_h = F.array().cast("array<bigint>")
-    est = (
-        # LEFT joins + either-side filter: a pair whose one language has
-        # no grams at all still gets its one-sided union estimate (the
-        # oracle's merged CTE emits it); only both-empty pairs drop —
-        # matching the former union-of-sides shape exactly. After the
-        # filter, `top` has >= 1 element, so element_at(top, -1) is
-        # ANSI-safe.
-        pairs.join(F.broadcast(ska), "lang_a", "left")
-        .join(F.broadcast(skb), "lang_b", "left")
-        .filter(F.col("hs_a").isNotNull() | F.col("hs_b").isNotNull())
-        .select(
-            "lang_a",
-            "lang_b",
-            F.coalesce("hs_a", no_h).alias("hs_a"),
-            F.coalesce("hs_b", no_h).alias("hs_b"),
-        )
-        .select("lang_a", "lang_b", top.alias("top"), "hs_a", "hs_b")
-        .select(
-            "lang_a",
-            "lang_b",
-            F.element_at(F.col("top"), -1).alias("kth"),
-            F.size("top").cast("long").alias("m"),
-            F.size(
-                F.array_intersect(
-                    "top", F.array_intersect("hs_a", "hs_b")
-                )
-            )
-            .cast("long")
-            .alias("n_common"),
-        )
-    )
-    est_union = F.when(F.col("m") < _KMV_K, F.col("m").cast("double")).otherwise(
-        F.lit(float(_KMV_K - 1) * 2.0**60) / F.col("kth").cast("double")
-    )
-    # exact ground truth straight off the checkpointed gram -> language
-    # table (_kmv_exact_sums: one 6-sum scalar pass) reshaped to
-    # (lang_a, lang_b) rows — the former broadcast crossJoin fanned the
-    # vocabulary out 3x and paid a keyed shuffle for what a scalar agg
-    # does in-place.
-    scalar = _kmv_exact_sums(gm)
-    exact = scalar.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(la).alias("lang_a"),
-                        F.lit(lb).alias("lang_b"),
-                        F.col(f"_u_{la}_{lb}").alias("exact_union"),
-                        F.col(f"_i_{la}_{lb}").alias("exact_intersect"),
-                    )
-                    for la, lb in _KMV_PAIRS
-                ]
-            )
-        ).alias("_e")
-    ).select("_e.lang_a", "_e.lang_b", "_e.exact_union", "_e.exact_intersect")
-    withest = est.select(
-        "lang_a",
-        "lang_b",
-        est_union.alias("est_union"),
-        (
-            (F.col("n_common").cast("double") / F.col("m").cast("double"))
-            * est_union
-        ).alias("est_intersect"),
-    )
-    return withest.join(F.broadcast(exact), ["lang_a", "lang_b"])
 
 
 def q_skew_profile(spark, sf_dir):

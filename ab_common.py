@@ -1,12 +1,11 @@
-"""Shared runner for the paired A/B harnesses (ab_gc, ab_hyperplane,
-ab_prefix, ab_starcc, ab_triangle, ab_regressions).
+"""Shared runner for the paired A/B harnesses at the repo root.
 
 Each harness supplies a CHILD script (run in its own subprocess so
 launch-time JVM configs apply) that prints one ``AB_RESULT {json}``
 line with ``{"mode": ..., "timings": {...}, "errors": {...}}``; this
 module owns the subprocess plumbing, result parsing, min-accumulation
 across rounds, and the per-query summary — the protocol lives in ONE
-place instead of six copies (round-9 review finding; the historical
+place instead of one copy per harness (round-9 review finding; the historical
 harnesses keep their own MODES/NAMES/child bodies, so their committed
 measurements stay reproducible).
 """

@@ -15,8 +15,6 @@ SURVEY §2.16.1 as an engine extension alongside connected components
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,28 +31,40 @@ def pagerank(
     """Fixed-iteration PageRank over a directed edge set ``(src, dst)``
     -> ``(node, pagerank)``. Unnormalized start (pr0 = 1.0 per node);
     dangling mass is NOT redistributed (documented simplification — it
-    rescales, not reorders, ranks on most graphs).
+    rescales, not reorders, ranks on most graphs). An edge with a NULL
+    endpoint is malformed and contributes nothing: it neither creates a
+    NULL node nor inflates a real node's out-degree.
 
-    Per iteration: one join edges⋈rank on src (edges pre-joined with
-    out-degree once and persisted — the per-iteration join is against
-    the small rank table), one partial-aggregating groupBy on dst, one
-    left join back to the node list. Rank tables are persisted per
-    iteration: each re-enters the next iteration's plan twice (contrib
-    join + node join), and without the persist the lineage re-evaluates
+    Adjacency-list shape: the whole edge set crosses the wire exactly
+    once. ``groupBy(src).collect_set(dst)`` fuses the (src,dst) dedupe
+    and the out-degree into ONE edge-scale exchange whose output is
+    node-scale rows (out-degree = array size; collect_set's
+    nondeterministic array ORDER is immaterial — every consumer either
+    counts the array or explodes it into an order-independent BIGINT
+    sum). The checkpointed adjacency table is the only loop-invariant
+    leaf; each iteration is a node-scale rank join + a codegen explode +
+    one map-side-combining groupBy(dst) whose shuffle volume is
+    node-scale. Rank tables are checkpointed on a cadence (below): each
+    re-enters the next iteration's plan twice (contrib join + node
+    join), and without a flat leaf the lineage re-evaluates
     2^iterations times (see BASELINE.md persist rule).
+
+    Limit: a source's out-list is one array row (~8 B/edge), so one
+    node's out-degree must stay below ~10^7 edges (a row of ~80 MB).
 
     Determinism: the contribution pr/outdeg is quantized to an integer
     ``floor(x * quantum + 0.5)`` BEFORE summation, so the aggregate is
     an exact BIGINT sum in any partition order and any engine; the
-    damped update then runs pointwise in double. Overflow bound:
-    in-degree × quantum ≪ 2^63 for graphs up to ~10^6 in-degree at the
-    default quantum.
+    damped update then runs pointwise in double. The contribution is
+    computed per SOURCE row before the explode (it is constant across a
+    source's out-edges). Overflow bound: in-degree × quantum ≪ 2^63 for
+    graphs up to ~10^6 in-degree at the default quantum.
 
-    At 100 TB: edges bucket/persist partitioned by src so the
-    per-iteration shuffle moves only the O(nodes) rank table; the
-    groupBy(dst) partial-aggregates map-side. The data-dependent-
-    convergence alternative (iterate until delta < eps) is the same
-    loop with a driver-side stopping check on an aggregated delta.
+    At 100 TB: the per-iteration shuffle moves only the O(nodes) rank
+    table; the groupBy(dst) partial-aggregates map-side. The
+    data-dependent-convergence alternative (iterate until delta < eps)
+    is the same loop with a driver-side stopping check on an aggregated
+    delta.
     """
     # localCheckpoint (not persist) for every loop-referenced table:
     # persist caches execution but Catalyst still re-walks the full
@@ -62,121 +72,9 @@ def pagerank(
     # leaves keep per-round analysis O(round) instead of O(history)
     # (round-5 CC rationale; reliable checkpoint() is the
     # executor-loss-resilient swap-in at cluster scale).
-    #
-    # Round-11 exchange-reduction seam (VERDICT r10 #4). Three shapes,
-    # all computing bit-identical quantized sums (per-edge contribution
-    # floor(pr/outdeg*quantum+0.5) summed as BIGINT is order- and
-    # shape-independent), selected by $SPARK_GRAFT_PAGERANK_SHAPE:
-    #
-    # - "adj" (default, A/B-measured fastest at sf~1 AND sf0.1): ONE
-    #   edge-scale exchange total — groupBy(src).collect_set(dst) fuses
-    #   the (src,dst) dedupe and the out-degree (array size) into a
-    #   single shuffle whose OUTPUT is node-scale rows; the checkpointed
-    #   adjacency leaf is then the only thing iterations scan (explode
-    #   is codegen, no exchange). Skew note for 100 TB power-law graphs:
-    #   a hub node's out-list lands in one array row (~8 B/edge) — fine
-    #   to ~10^7 out-degree; beyond that flip the env to "flat", which
-    #   keeps per-edge rows at one extra edge-scale exchange.
-    # - "flat": dedupe via distinct (edge-scale exchange #1), checkpoint
-    #   the flat per-edge leaf, derive out-degree/nodes/iterations from
-    #   it (node-scale aggs + broadcast joins). No array-row skew.
-    # - "legacy": the pre-round-11 shape — distinct/nodes/outdeg lineage
-    #   re-walked by every consumer (per-consumer column pruning defeats
-    #   ReuseExchange: ~5 redundant edge-scale evaluations at 2
-    #   iterations; measured 3.5 s at sf~1 vs DuckDB 0.26 s).
-    # One NULL contract for ALL shapes (ADVICE r11): an edge with a
-    # NULL endpoint is malformed and contributes nothing — it neither
-    # creates a NULL node nor inflates a real node's out-degree. Before
-    # round 12 only the adj shape filtered (collect_set additionally
-    # drops NULL dsts), so legacy/flat diverged on NULL-containing
-    # inputs; the filter is now applied once, up front, shape-blind.
-    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    shape = os.environ.get("SPARK_GRAFT_PAGERANK_SHAPE", "adj")
-    if shape == "adj":
-        return _pagerank_adjacency(edges, iterations, damping, base, quantum)
-    edges = edges.select("src", "dst").distinct()
-    if shape == "flat":
-        edges = edges.transform(checkpoint_small)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-    ed = edges.join(outdeg, "src")
-    # Checkpoint the loop-invariant tables only when the loop is long
-    # enough for repeated-subtree analysis to matter: at <=2 iterations
-    # ReuseExchange dedups the repeated node/edge exchanges inside ONE
-    # job, and the two checkpoint materialization job-sets are pure
-    # overhead (measured 0.86 s -> 0.71 s end-to-end at sf0.1). Longer
-    # loops re-reference both tables every round — there the flat leaf
-    # keeps per-round analysis O(round) (round-5 CC rationale).
-    if iterations > 2 and shape != "flat":
-        nodes = nodes.transform(checkpoint_small)
-        ed = ed.transform(checkpoint_small)
-
-    rank = nodes.withColumn("pr", F.lit(1.0))
-    for _i in range(iterations):
-        contrib = ed.join(
-            rank.select(F.col("node").alias("src"), "pr"), "src"
-        ).select(
-            "dst",
-            F.floor(F.col("pr") / F.col("_d") * F.lit(quantum) + F.lit(0.5))
-            .cast("long")
-            .alias("_q"),
-        )
-        sums = contrib.groupBy("dst").agg(F.sum("_q").alias("_sq"))
-        rank = (
-            nodes.join(sums.select(F.col("dst").alias("node"), "_sq"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("_sq"), F.lit(0)) / F.lit(quantum))
-                ).alias("pr"),
-            )
-        )
-        # Checkpoint cadence (round 6): every 2nd intermediate round,
-        # never the final one. Each rank is referenced twice by the
-        # next round (contrib join + node join), so an uncheckpointed
-        # round doubles the plan — bounded at 2x between checkpoints —
-        # while each checkpoint costs a materialization job-set on a
-        # kilobyte table (the BPE merge loop uses the same cadence,
-        # measured round 5). For the fixed-2-iteration default this
-        # removes ALL rank materializations: the whole refinement runs
-        # as one job over the checkpointed nodes/ed leaves.
-        if _i < iterations - 1 and (_i + 1) % 2 == 0:
-            rank = rank.transform(checkpoint_small)
-    return rank.select("node", F.col("pr").alias("pagerank"))
-
-
-def _pagerank_adjacency(
-    edges: DataFrame,
-    iterations: int,
-    damping: float,
-    base: float,
-    quantum: float,
-) -> DataFrame:
-    """Adjacency-list PageRank: the whole edge set crosses the wire
-    exactly once.
-
-    ``groupBy(src).collect_set(dst)`` fuses the (src,dst) dedupe and the
-    out-degree into ONE edge-scale exchange whose output is node-scale
-    rows (out-degree = array size; collect_set's nondeterministic array
-    ORDER is immaterial — every consumer either counts the array or
-    explodes it into an order-independent BIGINT sum). The checkpointed
-    adjacency table is the only loop-invariant leaf; each iteration is
-    a node-scale broadcast-sized rank join + a codegen explode + one
-    map-side-combining groupBy(dst) whose shuffle volume is node-scale.
-
-    Values are bit-identical to the flat shape: the per-edge quantized
-    contribution floor(pr/outdeg*quantum+0.5) is computed per SOURCE row
-    before the explode (it is constant across a source's out-edges) and
-    summed as BIGINT.
-    """
     adj = (
-        edges.select("src", "dst")  # NULL endpoints already filtered by pagerank()
+        edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .select("src", "dst")
         .groupBy("src")
         .agg(F.collect_set("dst").alias("_dsts"))
         .select("src", "_dsts", F.size("_dsts").alias("_d"))
@@ -219,6 +117,11 @@ def _pagerank_adjacency(
                 ).alias("pr"),
             )
         )
+        # Checkpoint cadence (round 6): every 2nd intermediate round,
+        # never the final one. An uncheckpointed round doubles the plan
+        # (bounded at 2x between checkpoints); each checkpoint costs a
+        # materialization job-set on a kilobyte table. At the default 2
+        # iterations no rank is materialized at all.
         if _i < iterations - 1 and (_i + 1) % 2 == 0:
             rank = rank.transform(checkpoint_small)
     return rank.select("node", F.col("pr").alias("pagerank"))

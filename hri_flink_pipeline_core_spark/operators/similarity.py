@@ -136,49 +136,24 @@ def _lit_vec(vals) -> str:
 
 
 def _dot_lit_sql(vec_col: str, vals) -> str:
-    """SQL reproducing dot(col, lit) exactly.
+    """SQL reproducing dot(col, lit) exactly: the same
+    ``aggregate(zip_with(…))`` higher-order left fold as dot(), with the
+    model row as a literal array.
 
-    Default form (round 12, REVERTED to the fold): the
-    ``aggregate(zip_with(…))`` higher-order fold. Round 11 shipped an
-    UNROLLED left-chained sum as the default — bit-identical (same
-    float→double cast per term, same left-to-right IEEE addition from
-    the 0.0 seed, same NULL poisoning via ``try_element_at``) but
-    whole-stage-codegen'd — on sf~1 evidence that it was "never
-    slower". Round 12 re-measured BOTH scales on current code (after
-    the big-k encode moved to the join path, which scores with the
-    column-column ``dot_w`` and never sees literal dots): the unroll
-    is now slower EVERYWHERE the literal path still runs — sf0.1
-    ann_pq_adc 3.93 s vs 0.99 s fold, kmeans_refine 3.17 vs 1.14,
-    ann_pq_recall 2.51 vs 1.14 (it bloats the serialized plan to
-    ~1.1 MiB task binaries and the 640–2,048-cell stacked expressions
-    fall out of JIT); sf~1 rerank 8.19 vs 6.59, recall 6.65 vs 5.13,
-    kmeans 4.29 vs 3.78. The unroll's former win regime was the big-k
-    encode, which no longer takes this path — so the fold is the
-    right default at every remaining call site. One residual
-    divergence of the unroll form, kept documented for the seam: a
-    vector LONGER than the model row folds to NULL under zip_with's
-    padding but yields the model-width partial dot when unrolled.
-    ``$SPARK_GRAFT_LIT_DOT=unroll`` forces the round-11 chain (A/B
-    seam; the fold is also the fallback for empty model rows)."""
-    import os
-
+    Round 11 shipped an unrolled left-chained sum here instead; round 12
+    measured it slower at every remaining call site (sf0.1 ann_pq_adc
+    3.93 s vs 0.99 s fold, kmeans_refine 3.17 vs 1.14; sf~1 rerank 8.19
+    vs 6.59 — the 640–2,048-cell stacked expressions bloat the task
+    binaries and fall out of JIT), and the unroll was removed."""
     if not vals:
-        # ADVICE r11: the unrolled chain with zero terms would render
-        # "(cast(0.0 as double) + )" — malformed SQL — and the fold
-        # form's empty array() literal is untyped; both forms of an
-        # empty dot ARE the constant 0.0, so render that directly.
+        # ADVICE r11: the fold form's empty array() literal is untyped;
+        # an empty dot IS the constant 0.0, so render that directly.
         return "cast(0.0 as double)"
-    if os.environ.get("SPARK_GRAFT_LIT_DOT") != "unroll":
-        return (
-            f"aggregate(zip_with({vec_col}, {_lit_vec(vals)}, "
-            f"(x, y) -> cast(x as double) * cast(y as double)), "
-            f"cast(0.0 as double), (acc, v) -> acc + v)"
-        )
-    terms = " + ".join(
-        f"cast(try_element_at({vec_col}, {i + 1}) as double) * {_lit_d(v)}"
-        for i, v in enumerate(vals)
+    return (
+        f"aggregate(zip_with({vec_col}, {_lit_vec(vals)}, "
+        f"(x, y) -> cast(x as double) * cast(y as double)), "
+        f"cast(0.0 as double), (acc, v) -> acc + v)"
     )
-    return f"(cast(0.0 as double) + {terms})"
 
 
 def _dot_cols_sql(a_col: str, b_col: str, width: int) -> str:
@@ -194,11 +169,10 @@ def _dot_cols_sql(a_col: str, b_col: str, width: int) -> str:
     float->double cast on each side, same left-to-right IEEE addition
     from the 0.0 seed, same NULL poisoning: a NULL element or a
     too-short array yields NULL under both forms) but runs in
-    whole-stage codegen. The one documented divergence, shared with
-    _dot_lit_sql: an array LONGER than ``width`` folds extra terms
-    under zip_with but is truncated here — every call site passes the
-    schema-contract width (PQ_SUBDIM / DEFAULT_DIM) of equal-width
-    vectors. ``$SPARK_GRAFT_COL_DOT=hof`` restores the fold (A/B seam).
+    whole-stage codegen. The one documented divergence: an array LONGER
+    than ``width`` folds extra terms under zip_with but is truncated
+    here — every call site passes the schema-contract width (PQ_SUBDIM /
+    DEFAULT_DIM) of equal-width vectors.
     """
     if width <= 0:
         return "cast(0.0 as double)"
@@ -227,12 +201,8 @@ def dot_w(a_name: str, b_name: str, width: int) -> Column:
     """dot() between two array COLUMNS (by name) of known width —
     unrolled into whole-stage codegen when width <= COL_DOT_UNROLL_MAX,
     else the HOF fold (wide unrolls are a measured regression, see the
-    cap's note). $SPARK_GRAFT_COL_DOT=hof forces the fold,
-    $SPARK_GRAFT_COL_DOT=unroll forces the unroll (A/B seams)."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_COL_DOT")
-    if mode == "hof" or (mode != "unroll" and width > COL_DOT_UNROLL_MAX):
+    cap's note)."""
+    if width > COL_DOT_UNROLL_MAX:
         return dot(F.col(a_name), F.col(b_name))
     return F.expr(_dot_cols_sql(_qi(a_name), _qi(b_name), width))
 
@@ -279,10 +249,10 @@ def collect_model_rows(
     return sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
 
 
-def _cos_struct_array_sql(vec_col: str, norm_col: str, cents) -> str:
-    """array<struct<s: cosine, nl: -label>> over the literal centroids —
-    array_max/array_sort on it reproduces top_k_per_key's
-    struct(cos, -label) ordering (ties -> smallest label)."""
+def _cos_struct_entries(vec_col: str, norm_col: str, cents) -> list[str]:
+    """One ``named_struct(s: cosine, nl: -label)`` per literal centroid;
+    ordering these structs reproduces top_k_per_key's struct(cos, -label)
+    ordering (ties -> smallest label)."""
     entries = []
     for lbl, vec in cents:
         cos = (
@@ -290,7 +260,7 @@ def _cos_struct_array_sql(vec_col: str, norm_col: str, cents) -> str:
             f"({norm_col} * {_lit_d(_py_norm(vec))}))"
         )
         entries.append(f"named_struct('s', {cos}, 'nl', {-int(lbl)}L)")
-    return "array(" + ",".join(entries) + ")"
+    return entries
 
 
 def nearest_label_col(vec_col: str, norm_col: str, cents) -> Column:
@@ -303,23 +273,10 @@ def nearest_label_col(vec_col: str, norm_col: str, cents) -> Column:
     per-row allocation is what made the 6,400-cell literal plan fall
     behind the join (the r9 38.7 s row that set the 2,048-cell budget).
     greatest is variadic, allocation-free, and codegen splits its
-    comparison chain into JIT-sized methods. Identical semantics:
-    greatest and array_max use the same struct ordering (lexicographic,
-    (cosine, -label) — ties -> smallest label) and both skip NULL
-    entries. ``$SPARK_GRAFT_NEAREST=array`` restores the array form
-    (A/B seam)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NEAREST") == "array":
-        arr = _cos_struct_array_sql(vec_col, norm_col, cents)
-        return F.expr(f"cast(-array_max({arr}).nl as int)")
-    entries = []
-    for lbl, vec in cents:
-        cos = (
-            f"({_dot_lit_sql(vec_col, vec)} / "
-            f"({norm_col} * {_lit_d(_py_norm(vec))}))"
-        )
-        entries.append(f"named_struct('s', {cos}, 'nl', {-int(lbl)}L)")
+    comparison chain into JIT-sized methods. It orders the structs
+    lexicographically, (cosine, -label) — ties -> smallest label — and
+    skips NULL entries."""
+    entries = _cos_struct_entries(vec_col, norm_col, cents)
     if len(entries) == 1:
         return F.expr(f"cast(-({entries[0]}).nl as int)")
     return F.expr(f"cast(-greatest({','.join(entries)}).nl as int)")
@@ -330,7 +287,7 @@ def probe_labels_col(
 ) -> Column:
     """Top-``nprobe`` centroid labels by cosine (desc, ties -> smallest
     label), as array<int> — the literal-plan IVF probe selection."""
-    arr = _cos_struct_array_sql(vec_col, norm_col, cents)
+    arr = "array(" + ",".join(_cos_struct_entries(vec_col, norm_col, cents)) + ")"
     return F.expr(
         f"transform(slice(reverse(array_sort({arr})), 1, {nprobe}), "
         f"s -> cast(-s.nl as int))"
@@ -1043,8 +1000,6 @@ def ann_recall_report(
     one sort, one aggregate; the values are identical to the two-leg
     form by construction.
     """
-    import os
-
     # ONE model collect under the GENERAL driver budget (32k cells).
     # The vec leg consumes the rows as Python data, so the much smaller
     # LITERAL_CENTROID_MAX_CELLS budget — which guards SQL-literal
@@ -1065,14 +1020,13 @@ def ann_recall_report(
         and sum(len(v) for _, v in model_rows) <= LITERAL_CENTROID_MAX_CELLS
         else None
     )
-    if model_rows is not None and os.environ.get("SPARK_GRAFT_RECALL_LEG") != "sql":
+    if model_rows is not None:
         # round 12 (opt round): vectorized Arrow leg — the query sample
         # is collected (bounded, like ann_topk_blas; cap enforced in the
         # same single job) and the exact Q x N cosines run as per-dim
         # numpy folds instead of the interpreted HOF dot per pair. Falls
         # through to the SQL window form above the cap or when the
-        # centroid model exceeds the literal budget
-        # ($SPARK_GRAFT_RECALL_LEG=sql keeps the SQL form as A/B seam).
+        # centroid model exceeds the literal budget.
         q_rows = (
             queries.select(query_id, vec_col)
             .limit(RECALL_VEC_MAX_QUERIES + 1)
@@ -1349,11 +1303,7 @@ def kmeans_assign(
     struct's leading fields reproduce top_k_per_key's
     struct(_cos, -_c_label) order exactly (highest cosine, ties ->
     smallest label); _c_label/_vec ride along and never decide the max
-    (the -label field is unique per vector).
-    ``$SPARK_GRAFT_KM_ARGMAX=window`` restores the top_k_per_key
-    window (A/B seam — unlike pq_encode's 8-byte code payload, this
-    struct carries the dim-wide _vec array through the agg buffer, so
-    the pq win does not automatically transfer)."""
+    (the -label field is unique per vector)."""
     cent = centroids.select(
         F.col("label").alias("_c_label"),
         F.col("centroid").alias("_c_vec"),
@@ -1372,12 +1322,6 @@ def kmeans_assign(
             "_cos"
         ),
     )
-    import os
-
-    if os.environ.get("SPARK_GRAFT_KM_ARGMAX") == "window":
-        return top_k_per_key(
-            scored, ["vec_id"], F.struct(F.col("_cos"), -F.col("_c_label")), 1
-        ).select("vec_id", F.col("_c_label").alias("cluster"), "_vec")
     best = scored.groupBy("vec_id").agg(
         F.max(
             F.struct(
@@ -2040,18 +1984,9 @@ def kmeans_lloyd(
     BASELINE round-12) — keeping the collected-model iteration cadence
     either way. The broadcast-join + agg-argmax shape remains the
     fallback when even the model collect is over budget (k x dim >
-    32k cells). ``$SPARK_GRAFT_KM_ASSIGN`` in {join, literal, pandas}
-    forces a shape (A/B seam)."""
-    import os
-
-    forced = os.environ.get("SPARK_GRAFT_KM_ASSIGN")
-    cents = (
-        None
-        if forced == "join"
-        else collect_model_rows(
-            init_centroids, "label", "centroid",
-            max_cells=LITERAL_MODEL_MAX_CELLS,
-        )
+    32k cells)."""
+    cents = collect_model_rows(
+        init_centroids, "label", "centroid", max_cells=LITERAL_MODEL_MAX_CELLS
     )
     if cents is None:
         centroids = init_centroids
@@ -2071,12 +2006,7 @@ def kmeans_lloyd(
     dim = len(cents[0][1])
 
     def assign(cents_now):
-        cells = sum(len(v) for _, v in cents_now)
-        lit = (
-            forced == "literal"
-            or (forced != "pandas" and cells <= LITERAL_CENTROID_MAX_CELLS)
-        )
-        if lit:
+        if sum(len(v) for _, v in cents_now) <= LITERAL_CENTROID_MAX_CELLS:
             return base.withColumn(
                 "cluster", nearest_label_col("_vec", "_nrm", cents_now)
             )

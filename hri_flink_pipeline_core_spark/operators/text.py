@@ -13,8 +13,6 @@ has an exact DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -208,7 +206,7 @@ def pii_redact(text: Column) -> Column:
 # the distributed per-round loop runs unchanged. 65,536 rows of
 # (sym, freq) is a few MB — the same bounded-collect class as the kmv
 # sketches (k rows) and the literal model budget (32k cells). 0 disables
-# the local path (A/B seam; tests pin local == distributed).
+# the local path (tests patch it to 0 to pin local == distributed).
 BPE_LOCAL_MAX_WORDS = 65536
 
 
@@ -318,12 +316,9 @@ def bpe_train(
     # limit+collect action in place of 20+ jobs. Above the budget the
     # distributed loop below runs unchanged — the same measured-
     # crossover pattern as the literal-model budget in similarity.py.
-    local_max = int(
-        os.environ.get("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", str(BPE_LOCAL_MAX_WORDS))
-    )
-    if local_max > 0:
-        head = words.limit(local_max + 1).collect()
-        if len(head) <= local_max:
+    if BPE_LOCAL_MAX_WORDS > 0:
+        head = words.limit(BPE_LOCAL_MAX_WORDS + 1).collect()
+        if len(head) <= BPE_LOCAL_MAX_WORDS:
             merges = _bpe_train_local(
                 [(r["sym"], r["freq"]) for r in head], n_merges
             )

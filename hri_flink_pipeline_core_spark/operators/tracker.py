@@ -15,7 +15,10 @@ and a processing-time timer. Terminal transitions:
 - at most ONE terminal notification per batch (isFinished flag)
                                                        — Tracker.scala:187-194
 
-Three implementations share one sequential fold (``BatchTrackerState.feed``):
+Three implementations; the first two share one sequential fold, the
+``BatchTrackerState`` transitions (``on_count`` /
+``feed_counts_vectorized``, ``on_notification``, and the timer's
+``_is_complete`` re-check):
 
 1. ``TrackerSimulator`` — deterministic, clock-injected; ports the
    reference's operator-test-harness tier (TrackerTest.scala) 1:1.

@@ -148,7 +148,10 @@ def get_spark(
         # driver-side overhead — off in both modes; results and plans
         # are untouched (the wrapper only enriches error messages).
         # $SPARK_GRAFT_DF_DEBUGGING restores it for interactive
-        # debugging sessions.
+        # debugging sessions. PySpark caches the setting on the
+        # process's first DataFrame API call, so the variable takes
+        # effect only when set before that call; changing it for a
+        # running process does nothing.
         .config("spark.python.sql.dataFrameDebugging.enabled", df_debugging)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")

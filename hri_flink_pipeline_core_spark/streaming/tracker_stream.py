@@ -183,6 +183,9 @@ def make_tracker_func(timeout_ms: int = DEFAULT_TIMEOUT_MS, ttl_ms: int = STATE_
             if st._is_complete():
                 st._emit(Status.COMPLETED, None)
             state.update(_state_row(st))
+            # Spark clears the timeout on every call: re-arm the TTL
+            # sweep, or this state (finished or parked) is never evicted.
+            state.setTimeoutDuration(ttl_ms)
             if st.outputs:
                 yield _outputs_to_pdf(st.outputs)
             return

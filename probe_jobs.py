@@ -30,7 +30,6 @@ def main():
         fn(spark, sf_dir).toPandas()
         release_persisted_intermediates()
         spark.catalog.clearCache()
-        j0 = len(st.getJobIdsForGroup(None) or [])
         ids0 = set(st.getJobIdsForGroup(None) or [])
         t0 = time.perf_counter()
         fn(spark, sf_dir).toPandas()

@@ -452,17 +452,16 @@ def test_skew_profile_single_count_shuffle(spark, sf001):
 
 
 def test_kmv_set_ops_sketch_joins_are_small(spark, sf001):
-    """Sketch algebra plan shapes, BOTH round-10 shapes:
+    """Sketch algebra plan shapes (round 10):
 
-    - the default literal shape returns a 3-row LITERAL result (the
-      pair algebra ran driver-side on collected k-bounded sketches) —
-      its final plan must be a local/flat leaf with no join, exchange
-      or aggregate left;
-    - the sketch BUILD it collects from, and the all-DataFrame shape
-      behind $SPARK_GRAFT_KMV_SHAPE=agg, keep the rounds-5-9
-      guarantees: partial aggs, no cartesian products, checkpointed
-      gram leaf (no parquet rescan), and no per-key-data-sized
-      WindowExec anywhere (VERDICT r5 #4)."""
+    - q_kmv_set_ops returns a 3-row LITERAL result (the pair algebra
+      ran driver-side on collected k-bounded sketches) — its final plan
+      must be a local/flat leaf with no join, exchange or aggregate
+      left;
+    - the sketch BUILD and the exact-sum aggregation it collects from
+      keep the rounds-5-9 guarantees: partial aggs, checkpointed gram
+      leaf (no parquet rescan), and no per-key-data-sized WindowExec
+      anywhere (VERDICT r5 #4)."""
     lit_plan = plan_of(entry.q_kmv_set_ops(spark, sf001), mode="simple")
     for op in ("Join", "Exchange", "HashAggregate", "Window"):
         assert op not in lit_plan
@@ -472,12 +471,11 @@ def test_kmv_set_ops_sketch_joins_are_small(spark, sf001):
     assert "Window" not in sketch_plan
     assert "Scan ExistingRDD" in sketch_plan
     assert "Scan parquet" not in sketch_plan
-    agg_plan = plan_of(entry._kmv_set_ops_agg(spark, sf001), mode="simple")
-    assert agg_plan.count("HashAggregate") >= 2
-    assert "CartesianProduct" not in agg_plan
-    assert "Scan ExistingRDD" in agg_plan
-    assert "Scan parquet" not in agg_plan
-    assert "Window" not in agg_plan
+    exact_plan = plan_of(entry._kmv_exact_sums(gm), mode="simple")
+    assert exact_plan.count("HashAggregate") >= 2
+    assert "Scan ExistingRDD" in exact_plan
+    assert "Scan parquet" not in exact_plan
+    assert "Window" not in exact_plan
 
 
 def test_kmv_distinct_no_window(spark, sf001):
@@ -663,12 +661,8 @@ def test_prefix_filter_single_corpus_explode(spark, sf001):
     # (the k centroids) is now a driver-side LITERAL per Lloyd round —
     # the final plan is one corpus scan + literal expressions, no
     # checkpointed leaf at all (see test_kmeans_refine_literal_model).
-    # pagerank_domains dropped round 7: at the fixed-2-iteration default
-    # the loop-invariant node/edge tables are deliberately NOT
-    # checkpointed — ReuseExchange dedups their repeated subtrees inside
-    # one job and the two materialization job-sets were pure overhead
-    # (graph.py pagerank rationale); >2-iteration callers still get the
-    # flat leaves (see test_pagerank_long_loop_checkpoints).
+    # pagerank's checkpointed leaves are pinned by
+    # test_pagerank_long_loop_checkpoints.
     [("incremental_neardup", 1)],
 )
 def test_iterative_queries_have_flat_checkpointed_leaves(
@@ -684,14 +678,14 @@ def test_iterative_queries_have_flat_checkpointed_leaves(
     assert plan.count("Scan ExistingRDD") >= n_rdd_scans
 
 
-def test_pagerank_long_loop_checkpoints(spark, sf001, monkeypatch):
-    """Shape contract (round 11): the default 'adj' shape ALWAYS reads
-    its loop-invariant adjacency/node tables from flat LogicalRDD leaves
-    (the whole edge set crosses the wire once, into the checkpointed
-    adjacency); the 'legacy' shape keeps the pre-r11 behavior — flat
-    leaves only for loops longer than the 2-iteration default, short
-    loops relying on ReuseExchange inside one job (graph.py
-    rationale)."""
+def test_pagerank_long_loop_checkpoints(spark, sf001):
+    """Shape contract (round 11): pagerank ALWAYS reads its adjacency
+    table from a flat LogicalRDD leaf — the whole edge set crosses the
+    wire once, into the checkpointed adjacency, so no iteration rescans
+    the edge source. Loops longer than the 2-iteration default also
+    checkpoint the node list (graph.py rationale)."""
+    import re
+
     from hri_flink_pipeline_core_spark.operators.graph import pagerank
     from hri_flink_pipeline_core_spark.session import read_table
     from pyspark.sql import functions as F
@@ -702,14 +696,15 @@ def test_pagerank_long_loop_checkpoints(spark, sf001, monkeypatch):
         (F.col("o_orderkey") % 97).alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
 
-    adj_plan = plan_of(pagerank(edges, iterations=2), mode="simple")
-    assert adj_plan.count("Scan ExistingRDD") >= 1
-
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_SHAPE", "legacy")
-    long_plan = plan_of(pagerank(edges, iterations=3), mode="simple")
-    assert long_plan.count("Scan ExistingRDD") >= 1
+    adj_leaf = re.compile(r"Scan ExistingRDD\[src#\d+L?,_dsts#\d+,_d#\d+\]")
+    node_leaf = re.compile(r"Scan ExistingRDD\[node#\d+L?\]")
     short_plan = plan_of(pagerank(edges, iterations=2), mode="simple")
-    assert "Scan ExistingRDD" not in short_plan
+    assert adj_leaf.search(short_plan)
+    assert "Scan parquet" not in short_plan
+    assert not node_leaf.search(short_plan)
+    long_plan = plan_of(pagerank(edges, iterations=3), mode="simple")
+    assert "Scan parquet" not in long_plan
+    assert node_leaf.search(long_plan)
 
 
 def test_kmeans_refine_literal_model(spark, sf001):

@@ -11,7 +11,7 @@ deadlines are disabled for the same reason.
 
 from __future__ import annotations
 
-import os
+from unittest import mock
 
 import pandas as pd
 import pytest
@@ -156,30 +156,19 @@ def test_pagerank_matches_python_reference(spark, edges):
     """pagerank vs an independent pure-Python implementation using the
     SAME quantization contract (floor(x*q+0.5) integer sums) — checks the
     join/agg plumbing, dangling-node handling, and determinism."""
-    import os
-
     from hri_flink_pipeline_core_spark.operators.graph import pagerank
 
-    # feed the RAW multi-edge list: every shape must dedupe (src,dst)
-    # itself (legacy/flat via distinct, adj via collect_set) — the
-    # reference below works on the deduped set.
+    # feed the RAW multi-edge list: pagerank must dedupe (src,dst)
+    # itself (collect_set) — the reference below works on the deduped
+    # set.
     raw = [(a, b) for a, b in edges if a != b]
     es = sorted(set(raw))
-    got_by_shape = {}
-    for shape in ("legacy", "flat", "adj"):
-        os.environ["SPARK_GRAFT_PAGERANK_SHAPE"] = shape
-        try:
-            got_by_shape[shape] = {
-                r["node"]: r["pagerank"]
-                for r in pagerank(
-                    spark.createDataFrame(raw, "src int, dst int"),
-                    iterations=2,
-                ).collect()
-            }
-        finally:
-            os.environ.pop("SPARK_GRAFT_PAGERANK_SHAPE", None)
-    got = got_by_shape["adj"]
-    assert got_by_shape["legacy"] == got_by_shape["flat"] == got
+    got = {
+        r["node"]: r["pagerank"]
+        for r in pagerank(
+            spark.createDataFrame(raw, "src int, dst int"), iterations=2
+        ).collect()
+    }
 
     nodes = sorted({n for e in es for n in e})
     outdeg: dict[int, int] = {}
@@ -198,12 +187,9 @@ def test_pagerank_matches_python_reference(spark, edges):
 
 
 def test_pagerank_null_endpoint_edges_one_contract(spark):
-    """ADVICE r11: all three shapes must share ONE NULL contract — an
-    edge with a NULL src or dst contributes nothing (no NULL node in the
-    output, no out-degree inflation of real nodes). Before round 12 the
-    legacy/flat shapes kept NULL endpoints while adj filtered them."""
-    import os
-
+    """ADVICE r11: an edge with a NULL src or dst contributes nothing
+    (no NULL node in the output, no out-degree inflation of real
+    nodes)."""
     from hri_flink_pipeline_core_spark.operators.graph import pagerank
 
     clean = [(1, 2), (2, 3), (3, 1)]
@@ -214,19 +200,13 @@ def test_pagerank_null_endpoint_edges_one_contract(spark):
             spark.createDataFrame(clean, "src int, dst int"), iterations=2
         ).collect()
     }
-    for shape in ("legacy", "flat", "adj"):
-        os.environ["SPARK_GRAFT_PAGERANK_SHAPE"] = shape
-        try:
-            got = {
-                r["node"]: r["pagerank"]
-                for r in pagerank(
-                    spark.createDataFrame(dirty, "src int, dst int"),
-                    iterations=2,
-                ).collect()
-            }
-        finally:
-            os.environ.pop("SPARK_GRAFT_PAGERANK_SHAPE", None)
-        assert got == expect, shape
+    got = {
+        r["node"]: r["pagerank"]
+        for r in pagerank(
+            spark.createDataFrame(dirty, "src int, dst int"), iterations=2
+        ).collect()
+    }
+    assert got == expect
 
 
 merge_rows = st.lists(
@@ -576,21 +556,22 @@ texts_strategy = st.lists(
 def test_bpe_train_matches_python_reference(spark, texts):
     """Both bpe_train execution paths — the driver-local merge loop
     (vocabulary under budget, the round-13 default at test scale) and
-    the distributed per-round loop (budget seam set to 0) — must match
-    the pure-Python reference, and therefore each other."""
-    from hri_flink_pipeline_core_spark.operators.text import bpe_train
+    the distributed per-round loop (BPE_LOCAL_MAX_WORDS patched to 0) —
+    must match the pure-Python reference, and therefore each other.
+    (mock.patch, not monkeypatch: hypothesis rejects function-scoped
+    fixtures inside @given.)"""
+    from hri_flink_pipeline_core_spark.operators import text as TX
 
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     expected = _bpe_train_python(texts, 6)
-    for budget in ("65536", "0"):
-        os.environ["SPARK_GRAFT_BPE_LOCAL_MAX_WORDS"] = budget
-        try:
+    for budget in (TX.BPE_LOCAL_MAX_WORDS, 0):
+        with mock.patch.object(TX, "BPE_LOCAL_MAX_WORDS", budget):
             got = [
                 (r.merge_idx, r.left, r.right, r.merged, r.pair_count)
-                for r in bpe_train(df, n_merges=6).orderBy("merge_idx").collect()
+                for r in TX.bpe_train(df, n_merges=6)
+                .orderBy("merge_idx")
+                .collect()
             ]
-        finally:
-            os.environ.pop("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", None)
         assert got == expected, f"budget={budget}"
 
 
@@ -601,7 +582,7 @@ def test_bpe_train_regex_special_symbols(spark):
     Pattern.quote), and replacement strings containing $ and \\ (Java
     replacement metacharacters). Each word forces merges whose pattern
     or replacement would misbehave unescaped."""
-    from hri_flink_pipeline_core_spark.operators.text import bpe_train
+    from hri_flink_pipeline_core_spark.operators import text as TX
 
     texts = [
         "\\E\\E\\E\\E",  # merged symbol "\\E" embeds \E in the pattern
@@ -611,15 +592,14 @@ def test_bpe_train_regex_special_symbols(spark):
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     expected = _bpe_train_python(texts, 8)
-    for budget in ("65536", "0"):
-        os.environ["SPARK_GRAFT_BPE_LOCAL_MAX_WORDS"] = budget
-        try:
+    for budget in (TX.BPE_LOCAL_MAX_WORDS, 0):
+        with mock.patch.object(TX, "BPE_LOCAL_MAX_WORDS", budget):
             got = [
                 (r.merge_idx, r.left, r.right, r.merged, r.pair_count)
-                for r in bpe_train(df, n_merges=8).orderBy("merge_idx").collect()
+                for r in TX.bpe_train(df, n_merges=8)
+                .orderBy("merge_idx")
+                .collect()
             ]
-        finally:
-            os.environ.pop("SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", None)
         assert got == expected, f"budget={budget}"
 
 

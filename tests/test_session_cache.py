@@ -89,7 +89,9 @@ def test_get_spark_dataframe_debugging_off(spark):
     enrichment) is disabled: ~3 py4j round-trips + a Python stack walk
     per API call, measured at ~5-7% of the bench suite (round 13).
     Scale-independent driver overhead, so off in both modes;
-    $SPARK_GRAFT_DF_DEBUGGING restores it for interactive debugging."""
+    $SPARK_GRAFT_DF_DEBUGGING restores it for interactive debugging —
+    only when set before the process's first DataFrame API call, since
+    PySpark caches the setting there (a later change does nothing)."""
     import os
 
     expected = os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false")

@@ -34,9 +34,9 @@ def test_ann_blas_matches_bruteforce_ranking(spark):
 
 
 def test_dot_lit_sql_empty_model_row(spark):
-    """ADVICE r11: the unrolled literal dot with an EMPTY vals list must
-    render valid SQL evaluating to 0.0 (the fold form's value), not the
-    malformed '(cast(0.0 as double) + )'."""
+    """ADVICE r11: the literal dot with an EMPTY vals list must render
+    valid SQL evaluating to 0.0 (the value of an empty fold), not an
+    untyped empty array() literal."""
     from hri_flink_pipeline_core_spark.operators.similarity import _dot_lit_sql
 
     sql = _dot_lit_sql("v", [])
@@ -48,40 +48,66 @@ def test_dot_lit_sql_empty_model_row(spark):
     assert row.d == 0.0
 
 
-def test_dot_lit_sql_fold_unroll_bit_identity(spark, monkeypatch):
-    """The two SPARK_GRAFT_LIT_DOT seam forms (round-12 default: the
-    HOF fold; round-11 chain via =unroll) must be BIT-identical on
-    equal-width vectors — same float->double cast per term, same
-    left-to-right IEEE addition from the 0.0 seed — and share NULL
-    poisoning for a NULL element. (A vector SHORTER than the model row
-    is also NULL under both: zip_with pads with NULL, try_element_at
-    out-of-range is NULL.)"""
-    import os
+def _py_dot(a, b) -> float:
+    """Python replica of dot(): left fold from the 0.0 seed, one IEEE
+    multiply and add per index. Python floats ARE IEEE doubles, so this
+    equals the JVM fold bit-for-bit (the _py_norm pattern)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
 
-    from hri_flink_pipeline_core_spark.operators.similarity import _dot_lit_sql
 
-    model = [0.1, -2.5, 3.75, 1e-7, -0.0, 123.456, 7.0, -8.125]
-    rows = [
-        ([0.3, 1.7, -2.2, 9.9, 1e-5, -1e5, 0.5, 2.25],),
-        ([1.0, None, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0],),  # NULL element
-        ([1.5, 2.5, 3.5],),  # shorter than the model row
-    ]
-    df = spark.createDataFrame(rows, "v array<float>")
-    out = {}
-    for mode in ("fold", "unroll"):
-        if mode == "unroll":
-            monkeypatch.setenv("SPARK_GRAFT_LIT_DOT", "unroll")
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_LIT_DOT", raising=False)
-        sql = _dot_lit_sql("v", model)
-        out[mode] = [r.d for r in df.selectExpr(f"{sql} AS d").collect()]
-    import struct as _s
+def test_dot_forms_match_python_left_fold(spark):
+    """Every dot form is BIT-identical to a Python IEEE left fold on
+    equal-width vectors: the literal dot (_dot_lit_sql, the HOF fold
+    over a literal model row), and dot_w both unrolled (width
+    COL_DOT_UNROLL_MAX) and as the HOF fold (one wider). A NULL element
+    or a vector SHORTER than the model row / width yields NULL (zip_with
+    pads with NULL, try_element_at out of range is NULL)."""
+    import random
+    import struct
+
+    from hri_flink_pipeline_core_spark.operators.similarity import (
+        COL_DOT_UNROLL_MAX,
+        _dot_lit_sql,
+        dot_w,
+    )
 
     def bits(x):
-        return None if x is None else _s.pack("<d", x)
+        return None if x is None else struct.pack("<d", x)
 
-    assert [bits(x) for x in out["fold"]] == [bits(x) for x in out["unroll"]]
-    assert out["fold"][1] is None and out["fold"][2] is None
+    def vec(width, seed):
+        # magnitudes 1e-3..1e3 and both signs, so a different summation
+        # order changes the low bits (asserted below)
+        r = random.Random(seed)
+        return [
+            r.uniform(-1.0, 1.0) * 10.0 ** r.randint(-3, 3)
+            for _ in range(width)
+        ]
+
+    for form, width in (
+        ("literal", 8),
+        ("unrolled", COL_DOT_UNROLL_MAX),
+        ("fold", COL_DOT_UNROLL_MAX + 1),
+    ):
+        model = vec(width, 5)
+        with_null = vec(width, 1)
+        with_null[1] = None
+        df = spark.createDataFrame(
+            [(vec(width, 1), model), (with_null, model), (vec(3, 1), model)],
+            "v array<float>, m array<double>",
+        )
+        if form == "literal":
+            d = F.expr(_dot_lit_sql("v", model))
+        else:
+            d = dot_w("v", "m", width)
+            assert ("aggregate" in str(d)) == (form == "fold")
+        got = df.select("v", d.alias("d")).collect()
+        v = got[0].v
+        assert _py_dot(v, model) != _py_dot(v[::-1], model[::-1])
+        assert bits(got[0].d) == bits(_py_dot(v, model)), form
+        assert got[1].d is None and got[2].d is None, form
 
 
 def ts(s):
@@ -416,14 +442,7 @@ def test_lsh_bucket_oracle_matches_on_degenerate_corpus(spark, tmp_path):
     assert got.n.sum() == 4
 
 
-def test_kmeans_join_fallback_matches_literal(spark, monkeypatch):
-    """The round-10 measured budget (LITERAL_CENTROID_MAX_CELLS) routes
-    big models to the broadcast-join Lloyd path — which must produce
-    IDENTICAL final assignments to the literal path (same exact-fold
-    math, same tie-breaks), since sf~1 corpora cross the budget while
-    the sf0.01 driver oracle runs the literal plan."""
-    from hri_flink_pipeline_core_spark.operators import similarity as S
-
+def _kmeans_lloyd_assignments(spark, S):
     emb = spark.createDataFrame(
         [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)], i % 4)
          for i in range(200)],
@@ -433,16 +452,43 @@ def test_kmeans_join_fallback_matches_literal(spark, monkeypatch):
         emb.select("label", "embedding"), ["label"], "embedding",
         S.quantized_mean_sql(),
     )
-    lit = sorted(
+    return sorted(
         (r["vec_id"], r["cluster"])
         for r in S.kmeans_lloyd(emb, cent0, iters=2).collect()
     )
+
+
+def test_kmeans_pandas_path_matches_literal(spark, monkeypatch):
+    """Above the literal codegen budget (LITERAL_CENTROID_MAX_CELLS) but
+    within the collectable model budget, kmeans_lloyd assigns through
+    the vectorized kmeans_assign_pandas — which must produce IDENTICAL
+    final assignments to the literal path (same fold-order-exact math,
+    same tie-breaks), since sf~1 corpora cross the budget while the
+    sf0.01 driver oracle runs the literal plan."""
+    from hri_flink_pipeline_core_spark.operators import similarity as S
+
+    lit = _kmeans_lloyd_assignments(spark, S)
     monkeypatch.setattr(S, "LITERAL_CENTROID_MAX_CELLS", 0)
-    join = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in S.kmeans_lloyd(emb, cent0, iters=2).collect()
+    assert _kmeans_lloyd_assignments(spark, S) == lit
+
+
+def test_kmeans_join_fallback_matches_literal(spark, monkeypatch):
+    """Above the collectable model budget (LITERAL_MODEL_MAX_CELLS)
+    collect_model_rows returns None and kmeans_lloyd runs the
+    broadcast-join Lloyd loop (kmeans_assign + checkpointed
+    kmeans_quantized_update) — identical final assignments to the
+    literal path."""
+    from hri_flink_pipeline_core_spark.operators import similarity as S
+
+    lit = _kmeans_lloyd_assignments(spark, S)
+    monkeypatch.setattr(S, "LITERAL_MODEL_MAX_CELLS", 0)
+    calls = []
+    orig = S.kmeans_assign
+    monkeypatch.setattr(
+        S, "kmeans_assign", lambda *a, **k: calls.append(1) or orig(*a, **k)
     )
-    assert lit == join
+    assert _kmeans_lloyd_assignments(spark, S) == lit
+    assert calls  # the join loop ran
 
 
 def test_ann_sq_recall_fused_matches_two_leg(spark):
@@ -492,7 +538,7 @@ def test_ann_sq_recall_fused_matches_two_leg(spark):
 
 
 def test_recall_vec_leg_matches_sql_leg(spark, monkeypatch):
-    """Round-12 (opt round) seam parity: the vectorized Arrow recall leg
+    """Round-12 (opt round) leg parity: the vectorized Arrow recall leg
     (driver-collected query sample + per-dimension numpy IEEE folds +
     per-batch partial top-k) must equal the SQL window form value for
     value — on BOTH sides of the literal-centroid budget, since sf~1
@@ -517,16 +563,18 @@ def test_recall_vec_leg_matches_sql_leg(spark, monkeypatch):
     q = emb.filter(F.col("vec_id") < 6)
 
     def run(nprobe):
-        monkeypatch.delenv("SPARK_GRAFT_RECALL_LEG", raising=False)
         vec = sorted(
             map(tuple, S.ann_recall_report(q, emb, cents, k=3, nprobe=nprobe)
                 .collect())
         )
-        monkeypatch.setenv("SPARK_GRAFT_RECALL_LEG", "sql")
-        sql = sorted(
-            map(tuple, S.ann_recall_report(q, emb, cents, k=3, nprobe=nprobe)
-                .collect())
-        )
+        # a query sample above the vec leg's cap falls through to SQL
+        with monkeypatch.context() as m:
+            m.setattr(S, "RECALL_VEC_MAX_QUERIES", 0)
+            sql = sorted(
+                map(tuple,
+                    S.ann_recall_report(q, emb, cents, k=3, nprobe=nprobe)
+                    .collect())
+            )
         return vec, sql
 
     for nprobe in (1, 2):

@@ -133,6 +133,7 @@ def test_ttl_eviction_removes_idle_state():
     h.feed(0, [notif(expected=5), count(True, 1)])
     h.time_out(TTL_MS)  # not yet idle for MORE than the TTL
     assert h.state.exists
+    assert h.state.timeout_ms == TTL_MS  # parked state re-arms the sweep
     h.time_out(TTL_MS + 1)
     assert not h.state.exists
     assert h.outputs == []
@@ -154,4 +155,19 @@ def test_timed_out_complete_batch_emits_completed_once():
     # neither a second timer fire nor a late record emits again
     h.time_out(100 + 2 * TIMEOUT_MS + 1)
     h.feed(100 + 2 * TIMEOUT_MS + 2, [count(True, 3)])
+    assert len(h.outputs) == 1
+
+
+def test_timer_completed_batch_is_evicted_by_ttl_sweep():
+    """A batch that completes by timer keeps its state only until the
+    TTL sweep: the timed-out call re-arms ``ttl_ms``, and the sweep's
+    later timeout removes the finished state."""
+    h = Harness()
+    h.feed(0, [notif(expected=2), count(True, 1), count(False, 2)])
+    h.time_out(TIMEOUT_MS + 1)
+    (o,) = h.outputs
+    assert o["status"] == Status.COMPLETED
+    assert h.state.timeout_ms == TTL_MS
+    h.time_out(TIMEOUT_MS + 1 + TTL_MS)
+    assert not h.state.exists
     assert len(h.outputs) == 1
