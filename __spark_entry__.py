@@ -306,7 +306,7 @@ def q_dedup_keep_best(spark, sf_dir):
     this argmax (the pq_encode/prefix_filter conversion) was built,
     verified output-identical, and measured SLOWER at both sf0.1
     (2.88 -> 3.00 s) and sf~1 (4.10 -> 4.25 s, interleaved min-of-3,
-    ab_r13.py `keep_best_agg_new`): cluster partitions are bounded and
+    OPTIMIZATION_r13.md §2): cluster partitions are bounded and
     tiny, so the removed per-cluster sort is cheaper than the added
     struct build + double negation on every member row. Not shipped."""
     from pyspark.sql import Window as SW

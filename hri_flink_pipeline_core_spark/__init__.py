@@ -14,9 +14,11 @@ Layout:
   topics      - ingest topic-name derivation/validation (TopicNamingException)
   operators/  - relational + validation + tracker + dedup/similarity/text ops
   functions/  - column-level helpers (header extraction, retry combinator)
-  sources/    - kafka + table source/sink builders
-  plans/      - Pipeline builder (declarative op-chain -> DataFrame)
-  streaming/  - end-to-end validation job (batch + Structured Streaming)
+  sources/    - kafka + file stream sources
+  sinks/      - Kafka record shapes, exactly-once writers, Mgmt-API sink
+  plans/      - DuckDB oracle SQL and driver-testdata adapters (oracle checks)
+  streaming/  - end-to-end validation job; ``streaming.pipeline.start_job``
+                wires the job graph ``cli.py`` runs
 """
 
 __version__ = "0.1.0"

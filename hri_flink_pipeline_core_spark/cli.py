@@ -6,6 +6,8 @@
 Run: ``python -m hri_flink_pipeline_core_spark.cli --brokers b:9092
 --input ingest.tenant.di.in [--password ...] [--mgmt-url ...]``
 
+This module only parses arguments and builds the Kafka endpoints;
+``streaming.pipeline.start_job`` wires and starts the job graph.
 Without --mgmt-url the tracker's terminal notifications loop back to the
 notification topic (BaseValidationJob.scala:273-286, README.md:33); with
 it they go to the HTTP sink.
@@ -14,19 +16,19 @@ it they go to the HTTP sink.
 from __future__ import annotations
 
 import argparse
+import os
 
 from .operators.tracker import DEFAULT_TIMEOUT_MS
-from .operators.validation import json_validator
-from .schemas import COUNT_EVENT_SCHEMA
 from .session import get_spark
 from .sinks import kafka as ksink
+from .sinks.kafka_tx import (
+    KafkaPartitionedTransactionalWriter,
+    KafkaTransactionalWriter,
+    confluent_producer_factory,
+)
 from .sinks.mgmt_api import MgmtApiSink, MgmtClient
 from .sources import kafka as ksource
-from .streaming.pipeline import (
-    ValidationPipeline,
-    parquet_dir_sink,
-    read_parquet_dir_stream,
-)
+from .streaming.pipeline import start_job
 from .topics import derive_topics
 
 
@@ -74,20 +76,17 @@ def main(argv=None) -> None:
     bootstrap = ",".join(args.brokers)
     prod_opts = {**client_opts, **ksource.producer_options()}
 
-    if args.exactly_once:
-        from .sinks.kafka_tx import (
-            KafkaPartitionedTransactionalWriter,
-            confluent_producer_factory,
-        )
-        import os as _os
+    def at_least_once(df, _b):
+        ksink.write_kafka_batch(df, bootstrap, prod_opts)
 
+    if args.exactly_once:
         # Bulk topics (*.out / *.invalid): executor-parallel exactly-once
         # — one transactional producer per partition, rows never route
         # through the driver (parity: the reference's parallel
         # EXACTLY_ONCE producers, BaseValidationJob.scala:252-259). The
         # control-plane notification sink below keeps the driver-side
         # single-transaction writer.
-        def tx_sink(shape_fn, topic, tid):
+        def bulk_writer(tid):
             # NOTE the log path is tx-partition-commits-<tid> (a DIR of
             # per-partition logs), deliberately DIFFERENT from the old
             # driver-writer's tx-commits-<tid> FILE — reusing that path
@@ -95,88 +94,54 @@ def main(argv=None) -> None:
             # the old whole-epoch records can't map to per-partition
             # granularity anyway. Upgrade cleanly: stop the query (no
             # in-flight replay), then restart with the new release.
-            writer = KafkaPartitionedTransactionalWriter(
+            return KafkaPartitionedTransactionalWriter(
                 bootstrap,
                 f"hri-validation-{topics.tenant_id}-{tid}",
                 producer_factory=confluent_producer_factory,
-                commit_log_dir=_os.path.join(
+                commit_log_dir=os.path.join(
                     args.workdir, f"tx-partition-commits-{tid}"
                 ),
             )
-            return lambda df, b: writer(shape_fn(df, topic), b)
-
-        valid_sink = tx_sink(ksink.hri_record_sink, topics.output_topic, "out")
-        invalid_sink = tx_sink(
-            ksink.invalid_record_sink, topics.invalid_topic, "invalid"
-        )
     else:
-        valid_sink = lambda df, _b: ksink.write_kafka_batch(  # noqa: E731
-            ksink.hri_record_sink(df, topics.output_topic), bootstrap, prod_opts
-        )
-        invalid_sink = lambda df, _b: ksink.write_kafka_batch(  # noqa: E731
-            ksink.invalid_record_sink(df, topics.invalid_topic), bootstrap, prod_opts
+        def bulk_writer(_tid):
+            return at_least_once
+
+    if args.mgmt_url:
+        terminal_sink = MgmtApiSink(
+            tenant_id=topics.tenant_id,
+            client=MgmtClient(
+                args.mgmt_url, args.client_id, args.client_secret,
+                args.audience, args.oauth_url,
+            ),
+        ).foreach_batch_writer()
+    else:
+        # loopback: terminal notifications back to the notification topic
+        notif_writer = at_least_once
+        if args.exactly_once:
+            notif_writer = KafkaTransactionalWriter(
+                bootstrap,
+                f"hri-validation-{topics.tenant_id}-notif",
+                producer_factory=confluent_producer_factory,
+                commit_log=os.path.join(args.workdir, "tx-commits-notif"),
+            )
+        terminal_sink = lambda df, b: notif_writer(  # noqa: E731
+            ksink.notification_sink(df, topics.notification_topic), b
         )
 
-    pipe = ValidationPipeline(
+    pipe = start_job(
         spark,
-        validator=json_validator(),
-        batch_completion_delay_ms=args.batch_delay,
+        topics,
         records_stream=ksource.read_hri_records_stream(
             spark, topics.input_topic, client_opts
         ),
         notifications_stream=ksource.read_notifications_stream(
             spark, topics.notification_topic, client_opts
         ),
+        bulk_writer=bulk_writer,
+        terminal_sink=terminal_sink,
         workdir=args.workdir,
-        valid_sink=valid_sink,
-        invalid_sink=invalid_sink,
+        batch_delay_ms=args.batch_delay,
     )
-
-    if args.mgmt_url:
-        sink = MgmtApiSink(
-            tenant_id=topics.tenant_id,
-            client=MgmtClient(
-                args.mgmt_url, args.client_id, args.client_secret,
-                args.audience, args.oauth_url,
-            ),
-        )
-        pipe.notification_out_sink = lambda df, b: sink.foreach_batch_writer()(df, b)
-    elif args.exactly_once:
-        from .sinks.kafka_tx import (
-            KafkaTransactionalWriter,
-            confluent_producer_factory,
-        )
-        import os as _os
-
-        _w = KafkaTransactionalWriter(
-            bootstrap,
-            f"hri-validation-{topics.tenant_id}-notif",
-            producer_factory=confluent_producer_factory,
-            commit_log=_os.path.join(args.workdir, "tx-commits-notif"),
-        )
-        pipe.notification_out_sink = lambda df, b: _w(
-            ksink.notification_sink(df, topics.notification_topic), b
-        )
-    else:
-        # loopback: terminal notifications back to the notification topic
-        pipe.notification_out_sink = lambda df, _b: ksink.write_kafka_batch(
-            ksink.notification_sink(df, topics.notification_topic), bootstrap, prod_opts
-        )
-
-    import os
-
-    counts_dir = os.path.join(args.workdir, "counts")
-    pipe.counts_sink = parquet_dir_sink(counts_dir)
-
-    dim = pipe.start_notification_dim()
-    pipe.start_validation(dim)
-
-    counts_stream = read_parquet_dir_stream(spark, counts_dir, COUNT_EVENT_SCHEMA)
-    notif_stream2 = ksource.read_notifications_stream(
-        spark, topics.notification_topic, client_opts
-    )
-    pipe.start_tracker(counts_stream, notif_stream2)
-
     for q in pipe.queries:
         q.awaitTermination()
 

@@ -109,7 +109,7 @@ LITERAL_MODEL_MAX_CELLS = 32_768
 # ann_ivf_probe/multiprobe, semdedup's assignment): the literal
 # struct-array argmax is k x dim multiply-adds per ROW plus a
 # k x dim-term expression to parse/codegen per ASSIGNMENT, and the
-# paired sweep (ab_kmeans.py, sf0.1, 2 Lloyd rounds, fresh JVM per
+# paired sweep (BASELINE.md round 10, sf0.1, 2 Lloyd rounds, fresh JVM per
 # mode, per-k min of 2x2 rounds) put the literal-vs-broadcast-join
 # crossover between k=32 and k=64 at dim 64: literal 1.33/1.55/2.19 s
 # vs join 1.72/1.91/2.32 s at k=10/16/32, but 3.65/5.02 s vs
@@ -1592,8 +1592,8 @@ def collect_codebooks(books_df: DataFrame):
     k=100 codes/subspace (6,400 cells, the sf~1 synthetic corpus) the
     join path measured 17.6 s vs the literal's 29.5 s for ann_pq_adc
     (rerank 17.7 vs 31.7; identical outputs asserted) — the same
-    literal-loses-past-k≈32-64 crossover ab_kmeans.py measured in
-    round 10, which that round's note explicitly left unmeasured for
+    literal-loses-past-k≈32-64 crossover BASELINE.md round 10 records,
+    which that round's note explicitly left unmeasured for
     PQ. At the real-testdata k=10 (640 cells) the literal path stays
     and remains the fast shape."""
     rows = _collect_model(books_df.select("sub", "code", "subcentroid"))

@@ -1,1 +1,1 @@
-"""Declarative pipeline plans."""
+"""DuckDB oracle SQL and driver-testdata adapters for oracle checks."""

@@ -37,6 +37,23 @@ def _bool_env(name: str, default: str) -> str:
     return value
 
 
+def _nonempty_env(name: str, default: str) -> str:
+    """$name as a Spark conf value that must not be blank: like an empty
+    boolean, an empty value hangs session start instead of raising."""
+    value = os.environ.get(name, default)
+    if not value.strip():
+        raise ValueError(f"{name} must not be empty, got {value!r}")
+    return value
+
+
+def _positive_int_env(name: str, default: str) -> str:
+    """$name as a positive integer Spark conf value."""
+    value = os.environ.get(name, default)
+    if not (value.isdigit() and int(value) > 0):
+        raise ValueError(f"{name} must be a positive integer, got {value!r}")
+    return value
+
+
 def get_spark(
     app_name: str = "hri-pipeline-core-spark",
     cpus: int | None = None,
@@ -103,13 +120,16 @@ def get_spark(
         "SPARK_GRAFT_CONSTRAINT_PROP", "false" if mode == "local" else "true"
     )
     df_debugging = _bool_env("SPARK_GRAFT_DF_DEBUGGING", "false")
+    shuffle_partitions = _positive_int_env(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", shuffle_default
+    )
+    advisory = _nonempty_env("SPARK_GRAFT_ADVISORY_PARTITION", advisory_default)
+    gc_opts = _nonempty_env("SPARK_GRAFT_GC_OPTS", "-XX:+UseParallelGC")
+    driver_mem = _nonempty_env("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", shuffle_default),
-        )
+        .config("spark.sql.shuffle.partitions", shuffle_partitions)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Respect the advisory size when coalescing instead of
@@ -130,10 +150,7 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             "false",
         )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", advisory_default),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.constraintPropagation.enabled", constraint_prop)
         # PySpark 4's DataFrame-debugging wrapper captures a Python call
@@ -161,8 +178,8 @@ def get_spark(
         # host where JDK-17-default G1 inflated EVERY query): ParallelGC
         # won all 20 A/B'd queries across three paired rounds — heavy
         # shuffle/dedup keys 0.72-0.97x, scan-agg micro-queries
-        # 0.59-0.80x, -18/-22% on the two subsets (ab_gc.py;
-        # BASELINE.md round-9 GC section). Spark's allocation pattern
+        # 0.59-0.80x, -18/-22% on the two subsets (BASELINE.md
+        # round-9 GC section). Spark's allocation pattern
         # (short-lived task buffers, whole-young collections) is the
         # textbook ParallelGC case; G1's concurrent phases compete with
         # the 32 task threads for cores. Latency-sensitive streaming
@@ -172,11 +189,8 @@ def get_spark(
         # the driver flag covers everything here). NOTE: a reused live
         # session keeps its launch-time GC — this flag only applies to
         # the process that creates the JVM.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC_OPTS", "-XX:+UseParallelGC"),
-        )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.extraJavaOptions", gc_opts)
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
@@ -192,11 +206,9 @@ def get_spark(
     # an explicit extra_conf advisory outranks env/mode — without this,
     # a FRESH session built with extra_conf={...advisory: '32m'} would
     # be warned about and force-reset to the mode default (round-9
-    # review finding: profile_floor's 32m variants silently profiled 2m)
+    # review finding: a profiling run's 32m variants silently ran at 2m)
     _ADV_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    want = (extra_conf or {}).get(
-        _ADV_KEY, os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", advisory_default)
-    )
+    want = (extra_conf or {}).get(_ADV_KEY, advisory)
     have = spark.conf.get(_ADV_KEY, want)
     if have != want:
         import warnings

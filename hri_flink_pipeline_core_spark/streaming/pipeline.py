@@ -1,15 +1,23 @@
 """The end-to-end validation pipeline (BaseValidationJob.scala:148-220,
 re-expressed as Structured Streaming queries).
 
+``start_job`` wires and starts the job graph from its endpoints (record
+and notification streams, a bulk-topic writer factory and a terminal
+sink). ``cli.py`` passes Kafka endpoints; the tests pass file sources
+and parquet endpoints, so both run the same graph — the reference's one
+DI constructor shared by production and MiniCluster tests
+(BaseValidationJob.scala:128-146).
+
 Reference graph -> Spark mapping:
 
 1. notification source --broadcast--> every validator instance
      => a *compacted notification dim*: a tiny streaming query folds the
      notification stream into a latest-per-batchId parquet dim
-     (versioned dirs + _LATEST pointer for atomic swap); each record
-     micro-batch broadcast-joins the current dim. Micro-batching removes
-     the reference's metadata/data race (SURVEY.md §3 EP-1.4): a record
-     batch always sees *all* notifications compacted so far. A record
+     (``commit_snapshot``: versioned dirs + _LATEST pointer for atomic
+     swap); each record micro-batch broadcast-joins the current dim.
+     Micro-batching removes the reference's metadata/data race
+     (SURVEY.md §3 EP-1.4): a record batch always sees *all*
+     notifications compacted so far. A record
      that arrives before its batch's notification goes to ``*.invalid``
      as ``Bad Message - Unknown batchId`` and emits no count event. The
      injectable BatchLookup (operators/batch_lookup.py, the reference's
@@ -22,9 +30,10 @@ Reference graph -> Spark mapping:
      reuse replacing Flink side outputs (BaseValidationJob.scala:174-217).
 
 3. counts ∪ notifications -> keyed Tracker -> terminal notifications
-     => streaming_tracker (applyInPandasWithState) over the tagged
-     union, terminal output to the notification loopback sink and/or the
-     Mgmt-API HTTP sink.
+     => the counts hop through a ``parquet_dir_sink`` directory read back
+     as a stream; streaming_tracker (applyInPandasWithState) runs over
+     the tagged union, terminal output to the notification loopback sink
+     or the Mgmt-API HTTP sink.
 
 Delivery semantics: Spark checkpointing gives exactly-once *state* and
 at-least-once *sink* writes. Three exactly-once options mirror the
@@ -34,11 +43,11 @@ reference's parallel transactional producers
 - sinks/kafka_tx.KafkaPartitionedTransactionalWriter — the bulk-topic
   path: one transactional producer PER PARTITION on the executors,
   per-partition epoch logs; throughput scales with executor count.
-  Pass as valid_sink / invalid_sink.
+  ``cli.py`` returns one from ``start_job``'s ``bulk_writer``.
 - sinks/kafka_tx.KafkaTransactionalWriter — the control-plane path: a
   BatchSink that wraps each micro-batch in ONE driver-side Kafka
   transaction (begin/commit, abort-on-failure) with an epoch commit
-  log so replays skip; right for notification_out_sink.
+  log so replays skip; right for the terminal (loopback) sink.
 - the offset-identity idempotence contract: every valid record carries
   its source (topic, partition, offset), so replayed at-least-once
   writes are dedupable downstream (SURVEY.md §4, "exactly-once" row) —
@@ -63,16 +72,56 @@ from ..operators.tracker import DEFAULT_TIMEOUT_MS
 from ..operators.validation import (
     ValidationOutputs,
     Validator,
+    json_validator,
     latest_notifications,
     validate_records,
 )
-from ..schemas import BATCH_NOTIFICATION_SCHEMA
+from ..schemas import BATCH_NOTIFICATION_SCHEMA, COUNT_EVENT_SCHEMA
+from ..sinks import kafka as ksink
 from ..sources.files import read_table_stream
+from ..topics import TopicSet
 from .tracker_stream import streaming_tracker, tag_counts, tag_notifications
 
 # A sink is any callable taking the (already shaped) micro-batch DataFrame
 # and the micro-batch id.
 BatchSink = Callable[[DataFrame, int], None]
+
+
+# --------------------------------------------------------------------------
+# Versioned snapshots: immutable version dirs + an atomic _LATEST pointer
+# --------------------------------------------------------------------------
+
+def latest_snapshot(root: str) -> Optional[str]:
+    """The version directory ``root/_LATEST`` names, or None before the
+    first commit. The pointer holds a name relative to ``root``, so a
+    moved table still resolves; an absolute path (the format older
+    writers stored) resolves to itself."""
+    try:
+        with open(os.path.join(root, "_LATEST")) as fh:
+            name = fh.read().strip()
+    except FileNotFoundError:
+        return None
+    return os.path.join(root, name) if name else None
+
+
+def commit_snapshot(
+    root: str, name: str, build: Callable[[Optional[str]], DataFrame]
+) -> str:
+    """Write ``build(latest_snapshot(root))`` as the immutable version
+    ``root/name``, then swap ``_LATEST`` to it by one atomic rename.
+    Readers hold the old version until the swap. When the pointer already
+    names ``name`` — a replayed micro-batch that committed before a
+    crash — nothing is written. Returns the version directory."""
+    path = os.path.join(root, name)
+    base = latest_snapshot(root)
+    if base == path:
+        return path
+    build(base).write.mode("overwrite").parquet(path)
+    tmp = os.path.join(root, "_LATEST.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(name)
+    os.replace(tmp, os.path.join(root, "_LATEST"))
+    return path
 
 
 # --------------------------------------------------------------------------
@@ -102,16 +151,8 @@ class NotificationDim:
         self._cache_version: Optional[str] = None
         self._cache_df: Optional[DataFrame] = None
 
-    def _latest_path(self) -> Optional[str]:
-        p = os.path.join(self.root, "_LATEST")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            v = f.read().strip()
-        return os.path.join(self.root, v) if v else None
-
     def read(self, spark: SparkSession) -> DataFrame:
-        path = self._latest_path()
+        path = latest_snapshot(self.root)
         if path is None:
             return spark.createDataFrame([], BATCH_NOTIFICATION_SCHEMA).withColumn(
                 "offset", F.lit(None).cast("long")
@@ -127,15 +168,13 @@ class NotificationDim:
     def merge(self, notif_batch: DataFrame, batch_id: int) -> None:
         """foreachBatch body for the notification stream."""
         spark = notif_batch.sparkSession
-        merged = latest_notifications(
-            self.read(spark).unionByName(notif_batch), "offset"
+        commit_snapshot(
+            self.root,
+            f"v{batch_id:020d}",
+            lambda _base: latest_notifications(
+                self.read(spark).unionByName(notif_batch), "offset"
+            ),
         )
-        version = f"v{batch_id:020d}"
-        merged.write.mode("overwrite").parquet(os.path.join(self.root, version))
-        tmp = os.path.join(self.root, "_LATEST.tmp")
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.replace(tmp, os.path.join(self.root, "_LATEST"))
 
     def writer(self) -> BatchSink:
         return self.merge
@@ -149,7 +188,7 @@ class NotificationDim:
 class ValidationPipeline:
     """Composable validation job. Sources/sinks are injected DataFrames /
     callables (the reference's test constructor, BaseValidationJob.scala:
-    128-146); the Kafka wiring in cli.py builds them for production."""
+    128-146); ``start_job`` wires and starts the production graph."""
 
     spark: SparkSession
     validator: Optional[Validator] = None
@@ -280,6 +319,53 @@ class ValidationPipeline:
         self.queries.clear()
 
 
+def start_job(
+    spark: SparkSession,
+    topics: TopicSet,
+    *,
+    records_stream: DataFrame,
+    notifications_stream: DataFrame,
+    bulk_writer: Callable[[str], BatchSink],
+    terminal_sink: BatchSink,
+    workdir: str,
+    batch_delay_ms: int,
+) -> ValidationPipeline:
+    """Wire and start the job graph: the notification dim, validation
+    with its three-way fan-out, and the tracker, in that order.
+
+    ``bulk_writer(tid)`` returns the sink for Kafka-shaped rows of the
+    ``"out"`` or ``"invalid"`` topic; ``terminal_sink`` receives the
+    tracker's terminal rows. Counts hop through ``workdir/counts`` (a
+    ``parquet_dir_sink``, read back as a stream). The tracker reuses
+    ``notifications_stream``: each started query gets its own source."""
+
+    def bulk(shape, topic: str, tid: str) -> BatchSink:
+        write = bulk_writer(tid)
+        return lambda df, b: write(shape(df, topic), b)
+
+    counts_dir = os.path.join(workdir, "counts")
+    pipe = ValidationPipeline(
+        spark,
+        validator=json_validator(),
+        batch_completion_delay_ms=batch_delay_ms,
+        records_stream=records_stream,
+        notifications_stream=notifications_stream,
+        valid_sink=bulk(ksink.hri_record_sink, topics.output_topic, "out"),
+        invalid_sink=bulk(
+            ksink.invalid_record_sink, topics.invalid_topic, "invalid"
+        ),
+        counts_sink=parquet_dir_sink(counts_dir),
+        notification_out_sink=terminal_sink,
+        workdir=workdir,
+    )
+    pipe.start_validation(pipe.start_notification_dim())
+    pipe.start_tracker(
+        read_parquet_dir_stream(spark, counts_dir, COUNT_EVENT_SCHEMA),
+        notifications_stream,
+    )
+    return pipe
+
+
 def parquet_dir_sink(root: str) -> BatchSink:
     """Idempotent-on-replay file sink: each micro-batch writes (overwrite)
     its own subdirectory, so a restarted query that replays batch N
@@ -315,10 +401,9 @@ def upsert_parquet_sink(
 ) -> BatchSink:
     """MERGE-into-table streaming sink on plain parquet: each micro-batch
     delta is upserted (operators/relational.py merge_upsert) into the
-    current snapshot, written as a new immutable version directory
-    ``v{batch_id}``, then a ``_LATEST`` pointer file is atomically swapped
-    (os.replace). This is the minimal form of what Delta/Iceberg MERGE
-    does: versioned immutable snapshots + an atomic pointer commit.
+    current snapshot and committed as version ``v{batch_id:020d}``
+    (``commit_snapshot``). This is the minimal form of what Delta/Iceberg
+    MERGE does: versioned immutable snapshots + an atomic pointer commit.
 
     Replay-idempotence: upsert of the same delta is a semantic no-op, and
     a replayed batch id is detected via the pointer (skip) — so restart
@@ -329,40 +414,26 @@ def upsert_parquet_sink(
     Scale notes: each commit rewrites the full snapshot — correct for
     dimension-table upkeep (the reference's notification dim, batch
     metadata), wrong for fact streams (use parquet_dir_sink partitions
-    there). On object stores, replace os.replace with a conditional-put
-    of the pointer object."""
+    there). On object stores, replace the pointer rename with a
+    conditional-put of the pointer object."""
     from hri_flink_pipeline_core_spark.operators.relational import (
         dedup_exact,
         latest_per_key,
         merge_upsert,
     )
 
-    latest_path = os.path.join(root, "_LATEST")
-
     def write(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        version_dir = os.path.join(root, f"v{batch_id}")
-        delta = (
-            latest_per_key(df, keys, order_col)
-            if order_col
-            else dedup_exact(df, keys)
-        )
-        base_dir = None
-        if os.path.exists(latest_path):
-            with open(latest_path) as fh:
-                base_dir = fh.read().strip()
-        if base_dir == version_dir:
-            return  # replayed batch already committed
-        merged = (
-            merge_upsert(spark.read.parquet(base_dir), delta, keys)
-            if base_dir
-            else delta
-        )
-        merged.write.mode("overwrite").parquet(version_dir)
-        tmp = latest_path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version_dir)
-        os.replace(tmp, latest_path)
+        def build(base: Optional[str]) -> DataFrame:
+            delta = (
+                latest_per_key(df, keys, order_col)
+                if order_col
+                else dedup_exact(df, keys)
+            )
+            if base is None:
+                return delta
+            return merge_upsert(df.sparkSession.read.parquet(base), delta, keys)
+
+        commit_snapshot(root, f"v{batch_id:020d}", build)
 
     return write
 
@@ -372,10 +443,11 @@ def compact_snapshot(
 ) -> str:
     """Small-file compaction for a versioned-snapshot table: read the
     ``_LATEST`` snapshot, rewrite it into ceil(total_bytes/target_bytes)
-    files, commit as a new immutable version (``v{n}_compact``) and swap
-    the pointer. Data-identical by construction (one round-robin
-    repartition, no row transformation); readers are never disturbed —
-    they hold the old version directory until the atomic pointer swap.
+    files and commit it as the new version ``<latest>_compact``
+    (``commit_snapshot``). Data-identical by construction (one
+    round-robin repartition, no row transformation); readers are never
+    disturbed — they hold the old version directory until the atomic
+    pointer swap.
 
     This is the maintenance half of the small-files problem every
     streaming parquet sink accrues: micro-batches write
@@ -383,20 +455,15 @@ def compact_snapshot(
     overhead. At 100 TB the same op runs per partition directory with
     target = spark.sql.files.maxPartitionBytes so one file = one scan
     split (no partial-split waste). Returns the new version directory."""
-    latest_path = os.path.join(root, "_LATEST")
-    with open(latest_path) as fh:
-        base_dir = fh.read().strip()
+    base_dir = latest_snapshot(root)
     total = sum(
         os.path.getsize(os.path.join(base_dir, f))
         for f in os.listdir(base_dir)
         if f.endswith(".parquet")
     )
     n_files = max(1, -(-total // target_bytes))
-    out_dir = base_dir.rstrip("/") + "_compact"
-    df = spark.read.parquet(base_dir)
-    df.repartition(n_files).write.mode("overwrite").parquet(out_dir)
-    tmp = latest_path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(out_dir)
-    os.replace(tmp, latest_path)
-    return out_dir
+    return commit_snapshot(
+        root,
+        os.path.basename(base_dir.rstrip("/")) + "_compact",
+        lambda base: spark.read.parquet(base).repartition(n_files),
+    )

@@ -1,8 +1,9 @@
-"""Full-chain integration: the complete reference job graph in one run
+"""Full-chain integration: the job graph ``cli.py`` starts, built by the
+same ``start_job`` with file sources and parquet endpoints
 (ValidationJobIntTest.scala happy-path parity) —
 
-records ──validate──┬─ valid parquet
-                    ├─ invalid parquet
+records ──validate──┬─ out (Kafka-shaped parquet)
+                    ├─ invalid (Kafka-shaped parquet)
                     └─ counts parquet ──┐
 notifications ──────────────────────────┴── tracker ── terminal notification
 
@@ -13,14 +14,13 @@ round-trip it.
 
 import json
 import os
+import time
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from hri_flink_pipeline_core_spark.operators.validation import json_validator
 from hri_flink_pipeline_core_spark.schemas import (
     BATCH_NOTIFICATION_SCHEMA,
-    COUNT_EVENT_SCHEMA,
     HRI_RECORD_SCHEMA,
     Status,
 )
@@ -28,10 +28,13 @@ from hri_flink_pipeline_core_spark.sinks import kafka as ksink
 from hri_flink_pipeline_core_spark.sources import kafka as ksource
 from hri_flink_pipeline_core_spark.sources.files import read_table_stream
 from hri_flink_pipeline_core_spark.streaming.pipeline import (
-    ValidationPipeline,
     parquet_dir_sink,
-    read_parquet_dir_stream,
+    start_job,
 )
+from hri_flink_pipeline_core_spark.streaming.tracker_stream import (
+    TRACKER_OUTPUT_SCHEMA,
+)
+from hri_flink_pipeline_core_spark.topics import derive_topics
 
 TOPIC = "ingest.t1.di.in"
 
@@ -44,13 +47,23 @@ def hri_row(batch_id, value=b'{"ok":1}', offset=0):
     )
 
 
+def _wait_for(rows, queries, seconds):
+    deadline = time.time() + seconds
+    while not rows and time.time() < deadline:
+        for q in queries:
+            if q.exception() is not None:
+                raise AssertionError(f"query {q.name or q.id} failed: {q.exception()}")
+        time.sleep(0.5)
+
+
 def test_full_chain_happy_path(spark, tmp_path):
     work = str(tmp_path)
     rec_dir = os.path.join(work, "rec")
+    stage_dir = os.path.join(work, "stage")
     notif_dir = os.path.join(work, "notif")
-    counts_dir = os.path.join(work, "counts")
-    valid_dir = os.path.join(work, "valid")
-    invalid_dir = os.path.join(work, "invalid")
+    job_dir = os.path.join(work, "job")
+    os.makedirs(rec_dir)
+    topics = derive_topics(TOPIC)
 
     # batch-X: 5 records, 4 valid + 1 invalid, expectedRecordCount=5,
     # status sendCompleted -> must COMPLETE with actual=5 invalid=1
@@ -63,45 +76,34 @@ def test_full_chain_happy_path(spark, tmp_path):
         expectedRecordCount=5, actualRecordCount=None, invalidRecordCount=None,
         invalidThreshold=5, failureMessage=None, metadata=None,
     )
-    spark.createDataFrame(records, HRI_RECORD_SCHEMA).write.parquet(rec_dir)
     spark.createDataFrame([notif], BATCH_NOTIFICATION_SCHEMA).withColumn(
         "offset", F.lit(0).cast("long")
     ).write.parquet(notif_dir)
-
+    spark.createDataFrame(records, HRI_RECORD_SCHEMA).coalesce(1).write.parquet(
+        stage_dir
+    )
     notif_schema = spark.read.parquet(notif_dir).schema
 
-    # stage 1+2: dim compaction + validation fan-out
-    pipe = ValidationPipeline(
+    terminal_rows = []
+    pipe = start_job(
         spark,
-        validator=json_validator(),
+        topics,
         records_stream=read_table_stream(spark, rec_dir, HRI_RECORD_SCHEMA),
         notifications_stream=read_table_stream(spark, notif_dir, notif_schema),
-        valid_sink=parquet_dir_sink(valid_dir),
-        invalid_sink=parquet_dir_sink(invalid_dir),
-        counts_sink=parquet_dir_sink(counts_dir),
-        workdir=os.path.join(work, "pipe"),
-        batch_completion_delay_ms=1500,
+        bulk_writer=lambda tid: parquet_dir_sink(os.path.join(work, tid)),
+        terminal_sink=lambda df, _b: terminal_rows.extend(df.collect()),
+        workdir=job_dir,
+        batch_delay_ms=1500,
     )
-    terminal_rows = []
     try:
-        dim = pipe.start_notification_dim(trigger={"availableNow": True})
-        pipe.queries[-1].awaitTermination(120)
-
-        # stage 3: tracker over the counts directory + notification stream.
-        # It starts before stage 2 writes any counts, as in cli.py.
-        pipe.notification_out_sink = lambda df, _b: terminal_rows.extend(df.collect())
-        counts_stream = read_parquet_dir_stream(spark, counts_dir, COUNT_EVENT_SCHEMA)
-        notif_stream = read_table_stream(spark, notif_dir, notif_schema)
-        pipe.start_tracker(
-            counts_stream, notif_stream, trigger={"processingTime": "300 milliseconds"}
-        )
-        pipe.start_validation(dim, trigger={"availableNow": True})
-        pipe.queries[-1].awaitTermination(120)
-        import time
-
-        deadline = time.time() + 60
-        while not terminal_rows and time.time() < deadline:
-            time.sleep(0.5)
+        dim_q, validation_q, _tracker_q = pipe.queries
+        # the dim holds the notification before any record arrives
+        dim_q.processAllAvailable()
+        for f in os.listdir(stage_dir):
+            if f.endswith(".parquet"):
+                os.rename(os.path.join(stage_dir, f), os.path.join(rec_dir, f))
+        validation_q.processAllAvailable()
+        _wait_for(terminal_rows, pipe.queries, 60)
     finally:
         pipe.stop()
 
@@ -116,12 +118,8 @@ def test_full_chain_happy_path(spark, tmp_path):
     assert merged["name"] == "x" and merged["dataType"] == "claims"
 
     # loopback sink shape round-trips through the notification parser
-    from hri_flink_pipeline_core_spark.streaming.tracker_stream import (
-        TRACKER_OUTPUT_SCHEMA,
-    )
-
     terminal_df = spark.createDataFrame(terminal_rows, TRACKER_OUTPUT_SCHEMA)
-    sunk = ksink.notification_sink(terminal_df, "ingest.t1.di.notification")
+    sunk = ksink.notification_sink(terminal_df, topics.notification_topic)
     row = sunk.collect()[0]
     assert bytes(row.key).decode() == "batch-X"
     parsed = ksource.parse_notifications(
@@ -138,7 +136,29 @@ def test_full_chain_happy_path(spark, tmp_path):
     assert parsed[0].actualRecordCount == 5
     assert parsed[0].invalidRecordCount == 1
 
-    # sinks on disk: 4 valid, 1 invalid
-    assert spark.read.parquet(valid_dir + "/batch=0").count() == 4
-    inv = spark.read.parquet(invalid_dir + "/batch=0").collect()
-    assert len(inv) == 1 and inv[0].failure.startswith("Invalid JSON")
+    # Kafka-shaped endpoint rows: *.out passes the source key, value and
+    # batchId header through; *.invalid has a null key and a JSON value
+    out = spark.read.parquet(os.path.join(work, "out")).collect()
+    assert sorted(bytes(r.key) for r in out) == [b"0", b"1", b"2", b"3"]
+    for r in out:
+        assert bytes(r.value) == b'{"ok":1}'
+        assert [(h.key, bytes(h.value)) for h in r.headers] == [
+            ("batchId", b"batch-X")
+        ]
+        assert r.topic == topics.output_topic
+    inv = spark.read.parquet(os.path.join(work, "invalid")).collect()
+    assert len(inv) == 1 and inv[0].key is None
+    assert inv[0].topic == topics.invalid_topic
+    failure = json.loads(bytes(inv[0].value))
+    assert failure["failure"].startswith("Invalid JSON")
+    assert failure["batchId"] == "batch-X" and failure["offset"] == 4
+
+    # the state a restarted deployment picks up again
+    for path in (
+        "checkpoints/notification_dim",
+        "checkpoints/validation",
+        "checkpoints/tracker",
+        "notification_dim/_LATEST",
+        "counts/batch=0",
+    ):
+        assert os.path.exists(os.path.join(job_dir, path)), path

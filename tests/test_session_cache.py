@@ -126,3 +126,24 @@ def test_get_spark_gc_default(spark):
         except Exception:
             pytest.skip("JVM management beans unreachable")
         assert any("PS" in n for n in names), names
+
+
+@pytest.mark.parametrize(
+    "name, value, message",
+    [
+        ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "", "must be a positive integer"),
+        ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0", "must be a positive integer"),
+        ("SPARK_GRAFT_SHUFFLE_PARTITIONS", "eight", "must be a positive integer"),
+        ("SPARK_GRAFT_ADVISORY_PARTITION", "", "must not be empty"),
+        ("SPARK_GRAFT_DRIVER_MEM", " ", "must not be empty"),
+        ("SPARK_GRAFT_GC_OPTS", "", "must not be empty"),
+    ],
+)
+def test_get_spark_rejects_bad_override(monkeypatch, name, value, message):
+    """An empty shuffle-partition override hung session start until a
+    timeout killed it; every override now fails before the builder runs,
+    with an error that names the variable."""
+    monkeypatch.setattr(S, "SparkSession", _NoSparkSession())
+    monkeypatch.setenv(name, value)
+    with pytest.raises(ValueError, match=f"{name} {message}"):
+        S.get_spark("override-bad")
